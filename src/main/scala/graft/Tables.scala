@@ -144,6 +144,15 @@ object Tables {
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // Every file: sink and checkpoint writes through LocalFs. Without
+    // libhadoop, stock RawLocalFileSystem forks one `chmod` per file
+    // and directory it creates and FileContext.rename forks `readlink`
+    // twice per rename: one 50k-event backfill pass (JFR jdk.ProcessStart)
+    // spawned 822 processes in ingest (542 chmod from the JSON sink and
+    // its log, 48 chmod from the checkpoint, 232 readlink from the log
+    // and checkpoint commits) and 35 chmod in the KPI write; none now.
+    // Same .crc sidecars, permissions and atomic renames; s3a: untouched.
+    graft.sources.LocalFs(spark)
     graft.functions.GraftFunctions.install(spark)
     spark
   }

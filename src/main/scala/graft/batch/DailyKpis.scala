@@ -78,7 +78,12 @@ object DailyKpis {
       .orderBy(col("dt"))
 
   /** KPI sink (reference: daily_kpis.py:165-172 — snappy parquet under
-    * kpis/daily/dt=<day>/). Snappy is Spark's parquet default. */
+    * kpis/daily/dt=<day>/). Snappy is Spark's parquet default. Dynamic
+    * partition overwrite replaces only the `dt=` partitions `kpis`
+    * holds, as the reference's per-day object put does: a `--date` run
+    * leaves every other day's KPIs in place. */
   def write(kpis: DataFrame, outPath: String): Unit =
-    kpis.write.mode("overwrite").partitionBy("dt").parquet(outPath)
+    kpis.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("dt").parquet(outPath)
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.jobs.{DailyKpisMain, JobArgs}
 import graft.operators.PipelineQueries
 
@@ -39,6 +40,25 @@ class JobsSpec extends SparkSpec {
     val row = kpis.collect()
     assert(row.length === 1)
     assert(row.head.getAs[Long]("total_events") > 0L)
+  }
+
+  test("DailyKpisMain.run --date replaces only its own dt= partition") {
+    val zone = PipelineQueries.writePartitionedZone(spark, sf)
+    val out = Files.createTempDirectory("graft-kpis-days")
+    out.toFile.deleteOnExit()
+    val (day1, day2) = ("2024-01-02", PipelineQueries.PruneDay)
+    def files(day: String): Set[String] =
+      Files.list(out.resolve(s"dt=$day")).iterator.asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    DailyKpisMain.run(spark, zone, out.toString, Map("date" -> day1))
+    DailyKpisMain.run(spark, zone, out.toString, Map("date" -> day2))
+    val (day1First, day2Files) = (files(day1), files(day2))
+    DailyKpisMain.run(spark, zone, out.toString, Map("date" -> day1))
+    // day 2 untouched; day 1 rewritten (each job names its files anew)
+    assert(files(day2) === day2Files)
+    assert(files(day1).nonEmpty && (files(day1) intersect day1First).isEmpty)
+    val kpis = spark.read.parquet(out.toString)
+    assert(kpis.select("dt").collect().map(_.get(0).toString).sorted === Array(day1, day2))
   }
 
   test("DailyKpisMain.run --all-days: one KPI row per day in the zone") {

@@ -15,6 +15,8 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // the file: storage layer production sessions use (Tables.session)
+    graft.sources.LocalFs(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }
