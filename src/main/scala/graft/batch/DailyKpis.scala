@@ -1,6 +1,6 @@
 package graft.batch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.EventSchema
 
@@ -44,7 +44,14 @@ object DailyKpis {
     * Spark restatement of the reference's S3 prefix prune
     * (daily_kpis.py:155-156); only a flat un-partitioned dir falls
     * back to the row filter on the parsed timestamp. Asserted as
-    * non-empty `PartitionFilters` in PlanSpec. */
+    * non-empty `PartitionFilters` in PlanSpec.
+    *
+    * On a partitioned zone every row is keyed by its `date=`
+    * partition, as the reference keys a run's rows by the day whose
+    * prefix it read (daily_kpis.py P9, `kpis["dt"] = day`): a line
+    * whose `event_ts` does not parse — ingest routed it by arrival
+    * time — counts toward its partition's day, not toward a NULL `dt`.
+    * A flat dir has no partition, so it keys by the parsed timestamp. */
   def compute(spark: SparkSession, rawPath: String, day: Option[String] = None): DataFrame = {
     val rawAll = readRaw(spark, rawPath)
     val partitioned = rawAll.columns.contains("date")
@@ -53,20 +60,23 @@ object DailyKpis {
       // PERMISSIVE mode yields all-null rows w/ corrupt sidecar for those
       .where(col(EventSchema.CorruptCol).isNull)
       .drop(EventSchema.CorruptCol)
-      .withColumn("ts", to_timestamp(col("event_ts")))
+      .withColumn("ts", try_to_timestamp(col("event_ts")))
     val pruned = day.fold(raw) { d =>
       if (partitioned) raw.where(col("date") === lit(d))
       else raw.where(to_date(col("ts")) === lit(d))
     }
-    aggregateEvents(pruned.drop("date", "hour"))
+    if (partitioned) aggregateEvents(pruned, col("date").cast("string"))
+    else aggregateEvents(pruned)
   }
 
   /** The KPI fold itself (daily_kpis.py:109-140) over any DataFrame
-    * with (ts, user_id, session_id, event_type, price). Exposed so
-    * properties of the fold are testable on arbitrary inputs. */
-  def aggregateEvents(events: DataFrame): DataFrame =
+    * with (user_id, session_id, event_type, price), one row per `dt`;
+    * `dt` defaults to the date of a `ts` column. Exposed so properties
+    * of the fold are testable on arbitrary inputs. */
+  def aggregateEvents(events: DataFrame,
+                      dt: Column = date_format(col("ts"), "yyyy-MM-dd")): DataFrame =
     events
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
+      .groupBy(dt.as("dt"))
       .agg(
         count(lit(1)).as("total_events"),
         countDistinct(col("user_id")).as("unique_users"),

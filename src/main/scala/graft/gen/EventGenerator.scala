@@ -90,18 +90,22 @@ object EventGenerator {
     * rows/s of (timestamp, value), and each row derives the SAME
     * seeded wire event as the backfill branch, keyed on the rate
     * source's monotone `value` with the source's wall-clock timestamp
-    * as event time. Returns an unbounded streaming DataFrame in wire
-    * schema — feed it to RawIngest.withPartitions / a Kafka sink. The
-    * rate source scales by `numPartitions` and needs no driver-side
-    * sleep loop (the reference paces with time.sleep on one process).
+    * as event time. Returns an unbounded stream shaped like a Kafka
+    * topic read: each event serialized to its wire line by
+    * [[KafkaSink.toMessages]] in `value`, and its emission time in
+    * `timestamp` — feed it to `RawIngest.withPartitions(_, col("timestamp"))`
+    * or a Kafka sink. The rate source scales by `numPartitions` and
+    * needs no driver-side sleep loop (the reference paces with
+    * time.sleep on one process).
     */
   def eventsRealtime(spark: SparkSession, rowsPerSecond: Int = 20,
-                     seed: String = "graft"): DataFrame =
-    withEventColumns(
+                     seed: String = "graft"): DataFrame = {
+    val events = withEventColumns(
       spark.readStream.format("rate")
         .option("rowsPerSecond", rowsPerSecond.toLong)
         .load()
-        .withColumnRenamed("value", "id")
-        .withColumnRenamed("timestamp", "ts"),
+        .select(col("value").as("id"), col("timestamp").as("ts"), col("timestamp")),
       seed)
+    KafkaSink.toMessages(events, keep = Seq("timestamp"))
+  }
 }

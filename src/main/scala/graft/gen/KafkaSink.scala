@@ -26,9 +26,11 @@ object KafkaSink {
 
   /** The producer's wire format (produce_events.py:82): whole event as
     * one JSON object in the message value, no key. Factored out so the
-    * serialization is unit-testable without a broker. */
-  def toMessages(events: DataFrame): DataFrame = {
+    * serialization is unit-testable without a broker. Columns named in
+    * `keep` are carried beside `value` instead of serialized into it. */
+  def toMessages(events: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
-    events.select(to_json(struct(events.columns.toIndexedSeq.map(col): _*)).as("value"))
+    val fields = events.columns.toIndexedSeq.filterNot(keep.contains)
+    events.select(to_json(struct(fields.map(col): _*)).as("value") +: keep.map(col): _*)
   }
 }

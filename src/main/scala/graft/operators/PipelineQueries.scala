@@ -715,11 +715,11 @@ object PipelineQueries {
     * partition counts. Exercises S4/S5/ST1/ST2 under the DuckDB gate:
     * the (date,hour) layout must exactly reflect event time.
     *
-    * Bounded to the fixture's first 3 event-days (HourlyCutoff):
-    * ingest cost is dominated by one-directory-per-(date,hour)
-    * creation (~7 ms/dir locally), so the slice keeps the gate fast
-    * while exercising the identical code path; the oracle applies the
-    * same cutoff. */
+    * Bounded to the fixture's first 3 event-days (HourlyCutoff): the
+    * sink writes one file into one directory per (date,hour) per
+    * batch, so ingest cost grows with the hours the input spans; the
+    * slice keeps the gate fast while exercising the identical code
+    * path, and the oracle applies the same cutoff. */
   def streamHourly(spark: SparkSession, dir: String): DataFrame = {
     val in = writeJsonl(spark, dir, "graft-ingest-in", cutoffDate = Some(HourlyCutoff))
     val out = Files.createTempDirectory("graft-ingest-out")
@@ -731,9 +731,10 @@ object PipelineQueries {
     spark.read
       .schema(graft.model.EventSchema.schema)
       .json(out.toString)
-      // the 3 garbage lines land in the processing-time fallback
-      // partition with all-null fields (P4); exclude rows with no
-      // parsed event_ts so the oracle sees only event-time data
+      // ingest drops the blank garbage line and lands the two malformed
+      // ones verbatim in the arrival-time bucket of garbage.txt (P4),
+      // where they parse to all-null rows; exclude rows with no parsed
+      // event_ts so the oracle sees only event-time data
       .where(col("event_ts").isNotNull)
       .withColumn("ts", to_timestamp(col("event_ts")))
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"),

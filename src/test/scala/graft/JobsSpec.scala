@@ -71,4 +71,28 @@ class JobsSpec extends SparkSpec {
     // zone holds days < StreamCutoff = 2024-01-06 → 5 event-days
     assert(kpis.select("dt").distinct().count() === 5L)
   }
+
+  test("DailyKpisMain.run --date keys rows whose event_ts does not parse by their date= partition") {
+    val zone = Files.createTempDirectory("graft-kpis-badts")
+    zone.toFile.deleteOnExit()
+    val day = "2025-09-01"
+    val hourDir = Files.createDirectories(zone.resolve(s"date=$day/hour=00"))
+    Files.writeString(hourDir.resolve("part-0.txt"), Seq(
+      """{"event_ts":"2025-09-01T00:10:00Z","user_id":"u_1","session_id":"s1","event_type":"page_view"}""",
+      "{}",
+      """{"event_ts":"broken","user_id":"u_2","session_id":"s2","event_type":"purchase","price":5.5}""")
+      .mkString("", "\n", "\n"))
+    val out = Files.createTempDirectory("graft-kpis-badts-out")
+    out.toFile.deleteOnExit()
+    DailyKpisMain.run(spark, zone.toString, out.toString, Map("date" -> day))
+    // the reference keys the run's rows by the day it read (P9): one row, no NULL dt
+    assert(Files.list(out).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("dt=")).toSeq === Seq(s"dt=$day"))
+    val row = spark.read.parquet(out.toString).collect()
+    assert(row.length === 1)
+    assert(row.head.getAs[Long]("total_events") === 3L)
+    assert(row.head.getAs[Long]("unique_users") === 2L)
+    assert(row.head.getAs[Long]("purchases") === 1L)
+    assert(row.head.getAs[Double]("revenue_usd") === 5.5)
+  }
 }

@@ -68,10 +68,13 @@ class PipelineSpec extends SparkSpec {
     // EP3: daily KPIs over the ingested raw zone
     val kpis = DailyKpis.compute(spark, outDir.toString).collect()
 
-    // expected from the generator directly (garbage lines: the json
-    // line `{}` has no ts → ingest buckets it under processing-time
-    // date (P4); it contributes 1 event to *some* day with no
-    // user/session/type → affects only total_events of today's bucket.
+    // expected from the generator directly (garbage lines: the blank
+    // one is dropped at ingest; the other three have no parseable ts,
+    // so ingest buckets them by garbage.txt's arrival time (P4). The
+    // two malformed ones are dropped as corrupt by the KPI job; `{}`
+    // counts as one event with no user/session/type toward its date=
+    // partition's day, the day garbage.txt was written, which is not
+    // one of the generator's days.
     val exp = events.collect().map(r => (
       r.getAs[String]("event_ts").substring(0, 10),
       r.getAs[String]("user_id"),

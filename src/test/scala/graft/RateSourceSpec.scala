@@ -7,7 +7,8 @@ import graft.streaming.RawIngest
 /** S2 realtime branch (reference: produce_events.py:97-98 — wall-clock
   * paced ~20 events/s): the `rate` source paces generation, each row
   * derives the standard wire event, and the stream flows through the
-  * SAME RawIngest partition derivation as the backfill/Kafka paths.
+  * SAME RawIngest partition derivation as the backfill/Kafka paths,
+  * as the wire lines KafkaSink would produce.
   * Asserts the pacing contract (N seconds ⇒ ~N×rate events) and that
   * the derived events are wire-schema-complete with event-time
   * partitions consistent with their timestamps.
@@ -17,7 +18,8 @@ class RateSourceSpec extends SparkSpec {
   test("eventsRealtime: rate-paced wire events through RawIngest partitioning") {
     val rate = 50
     val stream = RawIngest.withPartitions(
-      EventGenerator.eventsRealtime(spark, rowsPerSecond = rate, seed = "rt"))
+      EventGenerator.eventsRealtime(spark, rowsPerSecond = rate, seed = "rt"), col("timestamp"))
+    assert(stream.columns.toSeq === Seq("value", "date", "hour"))
     val q = stream.writeStream.format("memory").queryName("rt_events")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
@@ -25,7 +27,12 @@ class RateSourceSpec extends SparkSpec {
     try {
       Thread.sleep(2500)
       q.processAllAvailable()
-      val rows = spark.table("rt_events").collect()
+      // each landed line parsed back into the wire schema, beside its bucket
+      val rows = spark.table("rt_events")
+        .select(from_json(col("value"), graft.model.EventSchema.schema).as("e"),
+          col("date"), col("hour"))
+        .select(col("e.*"), col("date"), col("hour"))
+        .collect()
       // Pacing contract asserted against the rate source's OWN emitted
       // timestamps, not external sleep timing (a loaded machine can
       // start the query late enough that a wall-clock lower bound
