@@ -9,7 +9,7 @@ ad-hoc judge run.
 What this measures and does not measure:
 - It times ONLY oracle execution (connect + view registration excluded,
   like Bench excludes session startup). fetchall() materializes every
-  row, the analogue of Bench.forceEval.
+  row, the analogue of Measure.forceEval.
 - Queries without an oracle (rows-only dumps) are skipped — the engine
   side of the comparison should exclude them too when quoting a ratio.
 - One asymmetry documented in README: the engine's manifest-consumer

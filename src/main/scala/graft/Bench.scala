@@ -1,5 +1,7 @@
 package graft
 
+import graft.Measure.{forceEval, num, obj, str, stealSeconds, time}
+
 /** Benchmark main (driver contract): times every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -8,11 +10,11 @@ package graft
   * amortize to zero on a long-lived 100 TB engine), then records the
   * median of 3 timed runs, with a per-query spread guard
   * (`variance_flagged`) so host-contention flukes are mechanically
-  * separable from regressions. The record is SELF-QUALIFYING (r9):
+  * separable from regressions. The record is SELF-QUALIFYING:
   * hypervisor steal is measured over the timed region, a window with
   * steal/wall > 10% is retried up to 3 times, and a record that
   * never found a quiet window carries `"contaminated": true` so no
-  * consumer compares it across rounds unawares.
+  * consumer compares it across records unawares.
   *
   * The report splits per-query times into `queries` (every declared
   * query — the driver contract) plus `operators_sec` /
@@ -21,6 +23,10 @@ package graft
   * streaming machinery INSIDE the timed region (they are end-to-end
   * gates, not operators), so their time measures machinery fixed
   * cost, not operator throughput.
+  *
+  * Usage: `runMain graft.Bench [out]`; the record also goes to `out`
+  * (default bench.json in the working directory). Per-query iteration
+  * and the scaling/decade/skew sweeps live in [[Probe]].
   */
 object Bench {
   /** End-to-end pipeline gates: fixture re-serialization + streaming/
@@ -32,31 +38,8 @@ object Bench {
       "q_stream_sketch", "q_stream_drift", "q_stream_neardup",
       "q_stream_ann", "q_compact_kpis")
 
-  /** Fully evaluates every row and column of the plan. `count()` would
-    * let Catalyst prune projections and eliminate sorts under the
-    * aggregate, so pure-projection queries would time only a pruned
-    * parquet scan instead of the declared operator. Shared with
-    * [[ScalingProbe]].
-    */
-  private[graft] def forceEval(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.toRdd.foreach(_ => ())
-
-  /** Cumulative hypervisor steal time (seconds) from /proc/stat — the
-    * 9th cpu field, in 10 ms jiffies. This VM's host runs periodic
-    * steal storms (observed: a 187 CPU-second burst mid-bench turning
-    * a 50 s record into 91 s with identical code), so the record
-    * carries the delta: a `steal_sec` far above ~0 means the numbers
-    * measure the neighbor, not the engine — rerun on a quiet window
-    * before comparing rounds. Shared with [[ScalingProbe]]. */
-  private[graft] def stealSeconds(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val cpu = src.getLines()
-          .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-        if (cpu.length > 8) cpu(8).toDouble / 100.0 else 0.0
-      } finally src.close()
-    } catch { case _: Throwable => 0.0 }
+  private val MaxAttempts = 3
+  private val StealFracLimit = 0.10
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -77,126 +60,70 @@ object Bench {
     // all ~60 sub-second queries here.
     val floor = {
       import org.apache.spark.sql.functions._
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        forceEval(spark.range(1000).groupBy((col("id") % 8).as("k"))
-          .agg(sum(col("id")).as("s")))
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(); once() // warm like the queries
-      val xs = Seq.fill(5)(once()).sorted
-      xs(xs.size / 2)
+      time("floor", warm = 2, n = 5)(forceEval(spark.range(1000)
+        .groupBy((col("id") % 8).as("k")).agg(sum(col("id")).as("s")))).median.get
     }
-    // Median of 3 timed runs per query, same discipline as the floor
-    // probe: a one-off scheduling stall or GC pause (or a loaded
-    // machine — the round-4 committed record was 2.3× inflated by a
-    // concurrent oracle sweep) lands in one sample, not the record.
-    // A failing query must not kill the whole record, but it must not
-    // record a time either: time-to-failure (often ~0 s) folded into
-    // the median is indistinguishable from a fast pass for a consumer
-    // of the JSON. Failed queries record as JSON null (+ stderr).
-    // (min, median, max) of the 3 samples: the median is the record;
-    // min+max feed the variance guard below (r8 — the r7 driver run
-    // showed 8.5× single-run flukes on unchanged code, adjudicated as
-    // host contention; the spread makes noise-vs-regression mechanical
-    // for the next reader instead of requiring a judge re-time).
-    def timedSweep(): Map[String, Option[(Double, Double, Double)]] =
+    // Sorted 3 samples per query: the median is the record, min and max
+    // feed the variance guard; a one-off scheduling stall or GC pause
+    // lands in one sample, not the record. A failed query records None.
+    def timedSweep(): Map[String, Option[Seq[Double]]] =
       SparkEntry.queries.map { case (name, fn) =>
-        var failed = false
-        val samples = Seq.fill(3) {
-          val t0 = System.nanoTime()
-          try forceEval(fn(spark, sfDir)) catch {
-            case e: Throwable =>
-              failed = true
-              System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        name -> (if (failed) None else Some((samples.head, samples(1), samples.last)))
+        val t = time(name, n = 3)(forceEval(fn(spark, sfDir)))
+        name -> Option.when(!t.failed)(t.samples.sorted)
       }
-    // Self-qualifying record (r9): the r8 driver run carried 101 s of
-    // hypervisor steal inside a 143 s bench — half the wall-clock was
-    // the neighbor, and adjudicating that cost a judge re-time of
-    // eight queries. The record now refuses to certify a stormy
-    // window: steal is measured over the TIMED region only (warmup
-    // contamination is irrelevant to the medians), and if
-    // steal/wall > 10% the whole timed sweep re-runs on a fresh
-    // window (up to 3 attempts, keeping the least-contaminated).
-    // A record that never found a quiet window is marked
-    // "contaminated": true — consumers must not compare it across
-    // rounds.
-    val MaxAttempts = 3
-    val StealFracLimit = 0.10
+    // Steal is measured over the timed region only (warmup steal does
+    // not reach the medians); a sweep with steal/wall over the limit is
+    // re-run on a fresh window, keeping the least-contaminated attempt.
     var attempt = 0
-    var best: (Map[String, Option[(Double, Double, Double)]], Double, Double) = null
-    var done = false
-    while (!done && attempt < MaxAttempts) {
+    var best: (Map[String, Option[Seq[Double]]], Double, Double) = null
+    while (attempt < MaxAttempts && (best == null || best._3 / best._2 > StealFracLimit)) {
       attempt += 1
       val s0 = stealSeconds()
-      val t0 = System.nanoTime()
-      val r = timedSweep()
-      val wall = (System.nanoTime() - t0) / 1e9
+      var r: Map[String, Option[Seq[Double]]] = null
+      val wall = time("timed sweep") { r = timedSweep() }.samples.head
       val steal = stealSeconds() - s0
       if (best == null || steal / wall < best._3 / best._2) best = (r, wall, steal)
-      if (steal / wall <= StealFracLimit) done = true
-      else System.err.println(
+      if (steal / wall > StealFracLimit) System.err.println(
         f"[bench] attempt $attempt contaminated: steal ${steal}%.1f s over ${wall}%.1f s wall " +
           f"(${100 * steal / wall}%.0f%% > ${100 * StealFracLimit}%.0f%%) — retrying on a fresh window")
     }
     val (results, timedWall, timedSteal) = best
-    val contaminated = timedSteal / timedWall > StealFracLimit
-    // ms precision: full-precision doubles tripled the line length and
-    // round 3's driver tail-capture truncated it mid-object (BENCH_r03
-    // parsed:null). Three decimals is below the measured ~71 ms
-    // scheduling floor — nothing real is lost. Locale.ROOT: a
-    // comma-decimal default locale would silently break the JSON.
-    def ms(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(t => ms(t._2)) }
-      .mkString("{", ",", "}")
-    val ok = results.collect { case (k, Some((_, med, _))) => k -> med }
-    val failedNames = results.collect { case (k, None) => k }.toSeq.sorted
-    val total = ok.values.sum
-    val (pipes, ops) = ok.partition { case (k, _) => Pipelines(k) }
-    val pipeNames = Pipelines.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Variance guard (r8): queries whose 3-sample spread exceeds 2×
-    // (and isn't sub-250 ms scheduling jitter) are flagged with their
-    // (min, med, max) so a future reader can separate host-contention
-    // noise from real regression without a re-time. On a quiet window
-    // this list should be empty or near-empty; a LONG list means the
-    // whole record is suspect (check steal_sec).
-    val flagged = results.collect {
-      case (k, Some((lo, med, hi))) if lo > 0 && hi / lo > 2.0 && hi - lo > 0.25 =>
-        k -> ((lo, med, hi))
-    }.toSeq.sortBy(-_._2._3)
-    val flaggedJson = flagged.map { case (k, (lo, med, hi)) =>
-      "\"" + k + "\":[" + ms(lo) + "," + ms(med) + "," + ms(hi) + "]"
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
-      s""""floor_sec":${ms(floor)},""" +
-      s""""operators_sec":${ms(ops.values.sum)},"pipelines_sec":${ms(pipes.values.sum)},""" +
-      s""""pipeline_queries":$pipeNames,"failed_queries":$failedJson,""" +
-      s""""steal_sec":${ms(timedSteal)},"timed_wall_sec":${ms(timedWall)},""" +
-      s""""steal_total_sec":${ms(stealSeconds() - stealStart)},""" +
-      s""""attempts":$attempt,"contaminated":$contaminated,""" +
-      s""""variance_flagged":$flaggedJson,""" +
-      s""""queries":$qs,"sf":"$sfDir","mode":"steady-state"}"""
-    // Durable copy first: if the driver's stdout tail-capture ever
-    // truncates again, the committed file still holds the full record.
-    // Default derives from the working directory (sbt runMain runs at
-    // the repo root) so other checkouts don't write to a foreign
-    // absolute path; still arg-overridable, and a failed write is
-    // reported — a silent failure left the committed record stale in
-    // earlier rounds.
-    val outPath = args.headOption.getOrElse(
-      java.nio.file.Paths.get(sys.props("user.dir"), "bench.json").toString)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] FAILED to write $outPath: $e")
-    }
+    val line = record(results, floor, sfDir, attempt, timedWall, timedSteal,
+      stealSeconds() - stealStart)
+    // Durable copy first: if a stdout tail-capture truncates the line,
+    // the file still holds the full record.
+    Measure.writeRecord(Measure.recordPath(args.headOption, "bench.json"), line)
     spark.stop() // stop BEFORE printing so no Spark shutdown log line can land after the JSON
     println(line)
+  }
+
+  /** The stdout line: `results` holds each query's sorted samples, or
+    * None for a failed query (JSON null, listed in `failed_queries`). */
+  private[graft] def record(results: Map[String, Option[Seq[Double]]], floor: Double,
+      sfDir: String, attempts: Int, timedWall: Double, timedSteal: Double,
+      stealTotal: Double): String = {
+    val ok = results.collect { case (k, Some(s)) => k -> s(s.size / 2) }
+    val (pipes, ops) = ok.partition { case (k, _) => Pipelines(k) }
+    def names(xs: Seq[String]) = xs.map(str).mkString("[", ",", "]")
+    // Variance guard: a 3-sample spread over 2x (and not sub-250 ms
+    // scheduling jitter) is listed with its (min, med, max). On a quiet
+    // window the list is empty or near-empty; a long list means the
+    // whole record is suspect (check steal_sec).
+    val flagged = results.collect {
+      case (k, Some(s)) if s.head > 0 && s.last / s.head > 2.0 && s.last - s.head > 0.25 => k -> s
+    }.toSeq.sortBy(-_._2.last)
+    obj(Seq(
+      "metric" -> str("total"), "value" -> num(ok.values.sum), "unit" -> str("sec"),
+      "floor_sec" -> num(floor),
+      "operators_sec" -> num(ops.values.sum), "pipelines_sec" -> num(pipes.values.sum),
+      "pipeline_queries" -> names(Pipelines.toSeq.sorted),
+      "failed_queries" -> names(results.collect { case (k, None) => k }.toSeq.sorted),
+      "steal_sec" -> num(timedSteal), "timed_wall_sec" -> num(timedWall),
+      "steal_total_sec" -> num(stealTotal),
+      "attempts" -> attempts.toString,
+      "contaminated" -> (timedSteal / timedWall > StealFracLimit).toString,
+      "variance_flagged" -> obj(flagged.map { case (k, s) => k -> s.map(num(_)).mkString("[", ",", "]") }),
+      "queries" -> obj(results.map { case (k, v) => k -> num(v.map(s => s(s.size / 2))) }),
+      "sf" -> str(sfDir), "mode" -> str("steady-state")))
   }
 }

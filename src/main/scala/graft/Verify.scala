@@ -11,11 +11,7 @@ object Verify {
     val only = rest.toSet
     // a misspelled filter name would otherwise run nothing and leave an
     // empty output dir that looks like a clean run
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[verify] unknown query names: ${unknown.mkString(", ")}")
-      sys.exit(2)
-    }
+    Measure.requireKnown("verify", rest)
     val spark = Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -36,13 +32,6 @@ object Verify {
     // partial overwrite would otherwise leave a STALE parquet from a
     // prior attempt that check_oracle.py could compare and "pass".
     var hardFailures = List.empty[String]
-    def deleteRecursively(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val s = Files.walk(p)
-        try s.iterator().asScala.toSeq.reverse.foreach(f => Files.deleteIfExists(f))
-        finally s.close()
-      }
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -66,7 +55,7 @@ object Verify {
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         hardFailures ::= name
-        deleteRecursively(Paths.get(s"$outDir/$name"))
+        Measure.deleteRecursively(Paths.get(s"$outDir/$name"))
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       }
     }

@@ -786,10 +786,10 @@ object PipelineQueries {
   }
 
   /** One AvailableNow drain of the KPI materialized-view maintenance
-    * pipeline (r12 refactor: the gate body, parameterized on paths so
-    * [[graft.ScalingProbe]] can time REPEATED drains against a growing
-    * zone — the O(touched days) claim as a measured per-drain curve).
-    * Returns the number of foreachBatch upserts. */
+    * pipeline: the gate body, parameterized on paths so
+    * [[graft.Probe.drainCurves]] can time REPEATED drains against a
+    * growing zone — the O(touched days) claim as a measured per-drain
+    * curve. Returns the number of foreachBatch upserts. */
   private[graft] def upsertDrain(spark: SparkSession, in: String,
       out: String, ck: String): Long = {
     import graft.model.EventPredicates.{isPageview, isPurchase}
