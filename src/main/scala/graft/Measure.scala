@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 
 /** The measurement core of the harness mains ([[Bench]], [[Probe]]):
@@ -76,16 +76,6 @@ object Measure {
   /** `"k":v` pairs as one JSON object; values are already JSON. */
   def obj(fields: Iterable[(String, String)]): String =
     fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
-
-  /** Deletes a file tree bottom-up (`deleteOnExit` cannot remove a
-    * non-empty directory). A missing path is a no-op. */
-  def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
 
   /** Where a record goes: the explicit path if given, else `file` in
     * the working directory (sbt runMain runs at the checkout root), so

@@ -179,7 +179,7 @@ object Probe {
         s""""10x sf0.1: copy-tagged token domains, offset ids, same 30-day window",""" +
         s""""queries":${obj(queries)},"streams":${obj(streams)},""" +
         s""""steal_sec":${num(Measure.stealSeconds() - steal0)}}"""
-    } finally Measure.deleteRecursively(Paths.get(zone))
+    } finally Artifacts.deleteRecursively(Paths.get(zone))
   }
 
   /** `base` against the same-cardinality [[skewZone]]: row counts are
@@ -200,7 +200,7 @@ object Probe {
         s""""documents":"20pct of docs share one text (1000-copy clique at sf0.1)",""" +
         s""""embeddings":"30pct identical vectors"},""" +
         s""""queries":${obj(queries)},"steal_sec":${num(Measure.stealSeconds() - steal0)}}"""
-    } finally Measure.deleteRecursively(Paths.get(zone))
+    } finally Artifacts.deleteRecursively(Paths.get(zone))
   }
 
   /** Per-drain cost of the two maintained streaming pipelines on `dir`:
@@ -221,7 +221,7 @@ object Probe {
     }
     def inTempDirs[A](n: Int)(f: Seq[String] => A): A = {
       val ps = Seq.fill(n)(Files.createTempDirectory("graft-drain"))
-      try f(ps.map(_.toString)) finally ps.foreach(Measure.deleteRecursively)
+      try f(ps.map(_.toString)) finally ps.foreach(Artifacts.deleteRecursively)
     }
     val nearDup = inTempDirs(4) { case Seq(in, out, idx, ck) =>
       val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))

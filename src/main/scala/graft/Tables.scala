@@ -12,21 +12,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized parquet file schemas: without an explicit schema every
-    * `spark.read.parquet` runs a footer-inference JOB (~30 ms) — one
-    * per table per query invocation, which at 60+ bench queries × 1–6
-    * tables each is seconds of pure metadata re-reads. A production
+  /** Parquet file schemas go through [[Artifacts.memo]]: without an
+    * explicit schema every `spark.read.parquet` runs a footer-inference
+    * JOB (~30 ms), one per table per query invocation. A production
     * engine resolves schemas from the catalog once, not from file
-    * footers per query; this cache is that catalog stand-in (schemas
-    * are immutable fixture metadata, like [[rowCount]]). */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-
+    * footers per query; the memo is that catalog stand-in, and a
+    * rewritten table gets its new schema. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val schema = Artifacts.memo("schema", spark, sfDir, Seq(name))(spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     // Normalize `events.ts` to TimestampType regardless of how the
     // fixture generator encoded it — BIGINT nanos (older fixtures,
@@ -54,14 +50,10 @@ object Tables {
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     names.foreach { n => load(spark, sfDir, n).createOrReplaceTempView(n) }
 
-  /** Memoized fixture row counts — knob derivation (LSH bits, IVF
-    * nlist) needs |corpus| once per (dir, table), not one count job per
-    * query; parquet footers make the first count cheap and the cache
-    * makes repeats free. Driver-side metadata only (a Long), never data.
-    */
-  private val countCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  /** Memoized row counts: knob derivation (LSH bits, IVF nlist) needs
+    * |table| once per snapshot, not one count job per query. */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrElseUpdate((sfDir, name), load(spark, sfDir, name).count())
+    Artifacts.memo("rowCount", spark, sfDir, Seq(name))(load(spark, sfDir, name).count())
 
   /** Run `body` with spark.sql.shuffle.partitions = n, restoring the
     * session default afterwards — the size-to-data knob for query

@@ -55,7 +55,7 @@ object Verify {
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         hardFailures ::= name
-        Measure.deleteRecursively(Paths.get(s"$outDir/$name"))
+        Artifacts.deleteRecursively(Paths.get(s"$outDir/$name"))
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       }
     }

@@ -24,22 +24,18 @@ import org.apache.spark.sql.functions._
   * the access path a GDPR subject-access or per-user debugging query
   * needs, without maintaining a second user-sorted copy.
   *
-  * Layout is built once per (process, sf dir), idempotent, like
+  * Layout is built once per events snapshot, like
   * SortedLayout.ensureSorted: steady-state timings measure the query.
   */
 object BloomScan {
   /** Deterministic probe set for the gated query (exists at every sf). */
   val ProbeUsers: Seq[Long] = Seq(7L, 42L, 99L)
 
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Write-once ts-sorted events layout with a user_id bloom filter per
     * row group; returns its path. */
   private[graft] def ensureBloomLayout(spark: SparkSession, dir: String): String =
-    layoutCache.getOrElseUpdate(dir, {
-      val zone = java.nio.file.Files.createTempDirectory("graft-bloom")
-      zone.toFile.deleteOnExit()
-      val out = zone.resolve("events").toString
+    graft.Artifacts.memo("bloom-layout", spark, dir, Seq("events")) {
+      val out = graft.Artifacts.tempDir("graft-bloom").resolve("events").toString
       graft.Tables.withConfs(spark,
         "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
         graft.Tables.load(spark, dir, "events")
@@ -67,7 +63,7 @@ object BloomScan {
           .parquet(out)
       }
       out
-    })
+    }
 
   /** Per-user history rollup over the bloom layout — the point-lookup
     * query the layout exists for. The IN predicate reaches parquet as

@@ -214,15 +214,14 @@ object DupClusters {
     }
   }
 
-  /** Near-dup manifest STORE (r11, closing the r10 verdict's one
-    * 100 TB liability): the pair list and component labels are
+  /** Near-dup manifest STORE: the pair list and component labels are
     * persisted as WRITE-ONCE, VERSIONED parquet tables — never a
-    * driver-memory array. The r9/r10 form memoized both through
-    * `.collect()` into a TrieMap and replayed LocalRelations, which is
-    * result-sized at gate scale (20k pairs) but a pair manifest at
-    * 100 TB can be billions of rows: the consuming path must be a
-    * table scan, exactly as a corpus pipeline persists its dedup
-    * pairs before the drop-list jobs and lets every audit read them.
+    * driver-memory array. A collected pair list replayed as a
+    * LocalRelation is result-sized at gate scale (20k pairs), but a
+    * pair manifest at 100 TB can be billions of rows: the consuming
+    * path must be a table scan, exactly as a corpus pipeline persists
+    * its dedup pairs before the drop-list jobs and lets every audit
+    * read them.
     *
     * Layout: `<base>/v<format>/<corpus>/<snapshot>/{pairs,labels}`,
     * where <snapshot> fingerprints the documents table's file listing
@@ -239,7 +238,6 @@ object DupClusters {
     * (spec-pinned in DupClustersSpec, with build-once and
     * invalidate-on-version-change pinned via [[manifestBuilds]]). */
   private[graft] val manifestBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ensured = scala.collection.concurrent.TrieMap.empty[String, Unit]
   // v2 (r12): labels carry n_chars (consumers go corpus-free) and both
   // tables are range-clustered + sorted on their consumer keys
   private val ManifestFormat = 2
@@ -248,56 +246,14 @@ object DupClusters {
     sys.props.getOrElse("graft.manifest.dir",
       sys.props("java.io.tmpdir") + "/graft-manifests")
 
-  /** Corpus snapshot id: 128-bit digest of the documents table's file
-    * listing — (path, size, mtime) per data file. Listing-only (no
-    * data read); at production scale this would be the snapshot id of
-    * the table format. Resolved through the Hadoop FileSystem API
-    * (r11, review finding): the first cut used java.nio directly,
-    * which silently narrowed every manifest consumer to raw local
-    * paths — a `file:` URI, hdfs:// or s3a:// dir Spark reads fine
-    * would have thrown before detection started. */
+  /** Corpus snapshot id: the documents table's
+    * [[graft.Artifacts.snapshotId]]. */
   private[graft] def corpusVersion(dir: String): String =
-    tableVersion(dir, "documents")
-
-  /** [[corpusVersion]] generalized to any fixture table (r13: the
-    * memoized exact-dup member maps key on the embeddings/documents
-    * snapshot the same way the pair manifests key on documents). */
-  private[graft] def tableVersion(dir: String, table: String): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    val root = new Path(dir, s"$table.parquet")
-    val fs = root.getFileSystem(conf)
-    require(fs.exists(root), s"no $table table under $dir")
-    def walk(p: Path): Vector[org.apache.hadoop.fs.FileStatus] = {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) fs.listStatus(p).toVector.flatMap(c => walk(c.getPath))
-      else Vector(st)
-    }
-    // Paths are digested RELATIVE to the table root (r12, advisor):
-    // fully-qualified strings made the id depend on how the directory
-    // was addressed ('/data/x' vs 'file:/data/x' vs an NN-qualified
-    // hdfs URI), so the same corpus produced different snapshot ids
-    // per access path. The qualified root URI comes from the same
-    // FileSystem as the children, so relativize is exact.
-    val rootUri = fs.getFileStatus(root).getPath.toUri
-    val sig = walk(root)
-      .map(st => (rootUri.relativize(st.getPath.toUri).toString, st))
-      .sortBy(_._1)
-      .map { case (rel, st) => s"$rel|${st.getLen}|${st.getModificationTime}" }
-      .mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+    graft.Artifacts.snapshotId(SparkSession.active, dir, "documents")
 
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9._-]", "_").replaceAll("^_+", "")
 
-  /** Read-through table: serve `<base>/…/<name>` if its _SUCCESS
-    * exists, else build → temp dir → atomic rename (idempotent under
-    * concurrent builders; the JVM-local `ensured` map just skips the
-    * filesystem probe on repeat calls). Returns a plain parquet scan
-    * with an explicit schema — no footer job, no driver copy. */
   /** Range-clustered write layout (r12, verdict item 6): the manifest
     * is materialized once (localCheckpoint — the build must not re-run
     * for the sizing count), split into ≤128 MB range partitions on the
@@ -315,16 +271,21 @@ object DupClusters {
       .sortWithinPartitions(cols.map(col): _*)
   }
 
+  /** Read-through table: serve `<base>/…/<name>` if its _SUCCESS
+    * exists, else build → temp dir → atomic rename (idempotent under
+    * concurrent builders; the path names the snapshot, so the memo only
+    * skips the filesystem probe on repeat calls). Returns a plain
+    * parquet scan with an explicit schema — no footer job, no driver
+    * copy. */
   private[graft] def manifestTable(
       spark: SparkSession, base: String, corpusDir: String, version: String,
       name: String, schema: org.apache.spark.sql.types.StructType,
       layoutCols: Seq[String], bytesPerRow: Int = 24)(
       build: => DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val path = Paths.get(base, s"v$ManifestFormat", sanitize(corpusDir),
       version, name)
-    ensured.getOrElseUpdate(path.toString, this.synchronized {
+    graft.Artifacts.memo("manifest", spark, corpusDir, Nil, path.toString)(this.synchronized {
       if (!Files.exists(path.resolve("_SUCCESS"))) {
         manifestBuilds.incrementAndGet()
         Files.createDirectories(path.getParent)
@@ -335,9 +296,7 @@ object DupClusters {
         try Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
         catch { case _: java.nio.file.FileSystemException =>
           // another writer promoted first — keep theirs, drop ours
-          val s = Files.walk(tmp)
-          try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally s.close()
+          graft.Artifacts.deleteRecursively(tmp)
         }
       }
     })

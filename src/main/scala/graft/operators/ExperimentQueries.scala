@@ -59,7 +59,13 @@ object ExperimentQueries {
     * the count table incrementally and recomputes PSI from the
     * stored grain instead of raw history. */
   private[graft] def psiOfCounts(counts0: DataFrame): DataFrame = {
-    val counts = counts0.localCheckpoint(false)
+    // Eager: a lazy checkpoint is materialized by whichever consumer
+    // job runs first, and the others, already running the original
+    // lineage, then report task metrics for accumulators of a plan that
+    // can be garbage collected — lost metrics and a DAGScheduler ERROR
+    // per task (CheckpointMetricsSpec). The grid is tiny, so the extra
+    // job is cheap. Same for the other count grids below.
+    val counts = counts0.localCheckpoint()
     val types = counts.select(col("event_type")).distinct()
     val kDf = types.agg(count(lit(1)).cast("double").as("k"))
     val days = counts.groupBy(col("dt")).agg(sum(col("cnt")).as("n_day"))
@@ -312,7 +318,7 @@ object ExperimentQueries {
     val counts = load(spark, dir, "events")
       .groupBy(col("event_type"), hour(col("ts")).as("hr"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val nDf = counts.agg(sum(col("cnt")).cast("double").as("n"))
     val mx = counts.groupBy(col("event_type"))
       .agg(sum(col("cnt")).cast("double").as("nx"))
@@ -378,7 +384,7 @@ object ExperimentQueries {
               ((col("hi") - col("lo")) / KsBins)))))
           .otherwise(0L))
       .groupBy(col("dt"), col("bin")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val days = binned.groupBy(col("dt")).agg(sum(col("cnt")).as("n_day"))
     val bins = spark.range(KsBins).select(col("id").as("bin"))
     val wc = Window.partitionBy(col("dt")).orderBy(col("bin"))

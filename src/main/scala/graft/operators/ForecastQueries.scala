@@ -121,7 +121,8 @@ object ForecastQueries {
     val dailyAll = load(spark, dir, "events")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      // eager, like ExperimentQueries.psiOfCounts' grid
+      .localCheckpoint()
     val wTrend = Window.orderBy(col("dt")).rowsBetween(-3, 3)
     val trended = dailyAll
       .withColumn("dow", (dayofweek(to_date(col("dt"))) - 1).cast("int"))

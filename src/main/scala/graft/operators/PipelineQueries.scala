@@ -4,6 +4,7 @@ import java.nio.file.Files
 import scala.annotation.nowarn
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts.tempDir
 import graft.batch.DailyKpis
 import graft.streaming.RawIngest
 
@@ -57,25 +58,35 @@ object PipelineQueries {
       col("value").as("price"))).as("value"))
   }
 
-  /** Fixture input zones, memoized per (prefix, dir, cutoff): the
-    * serialized wire feed is test-fixture SETUP — the upstream
-    * producer's output, which in production exists before the job
-    * ever runs — so each gate pays for it once per JVM and the timed
-    * region measures the pipeline under test (ingest / streaming /
-    * scan), not fixture re-serialization. Output and checkpoint dirs
+  /** Fixture input zones, memoized per (prefix, cutoff) and source
+    * snapshot: the serialized wire feed is test-fixture SETUP — the
+    * upstream producer's output, which in production exists before the
+    * job ever runs — so each gate pays for it once per snapshot and the
+    * timed region measures the pipeline under test (ingest / streaming
+    * / scan), not fixture re-serialization. Output and checkpoint dirs
     * stay fresh per invocation. */
-  private val zoneCache = scala.collection.concurrent.TrieMap.empty[(String, String, Option[String]), String]
+  private def zone(spark: SparkSession, dir: String, prefix: String,
+      cutoffDate: Option[String] = None, source: String = "events")(
+      write: java.nio.file.Path => Unit): String =
+    graft.Artifacts.memo(prefix, spark, dir, Seq(source), cutoffDate) {
+      val z = tempDir(prefix)
+      write(z)
+      z.toString
+    }
+
+  /** Reference-tolerated garbage: malformed JSON and blank lines. */
+  private val Garbage = "not json\n\n{\"event_ts\": \"broken\n"
+
+  /** The wire feed plus [[Garbage]]. */
+  private def writeWire(spark: SparkSession, dir: String, cutoffDate: Option[String],
+      z: java.nio.file.Path): Unit = {
+    asWireJson(spark, dir, cutoffDate).coalesce(4).write.mode("overwrite").text(z.toString)
+    Files.writeString(z.resolve("garbage.txt"), Garbage)
+  }
 
   private def writeJsonl(spark: SparkSession, dir: String, prefix: String,
                          cutoffDate: Option[String] = None): String =
-    zoneCache.getOrElseUpdate((prefix, dir, cutoffDate), {
-      val in = Files.createTempDirectory(prefix)
-      in.toFile.deleteOnExit()
-      asWireJson(spark, dir, cutoffDate).coalesce(4).write.mode("overwrite").text(in.toString)
-      // reference-tolerated garbage: malformed JSON + blank lines
-      Files.writeString(in.resolve("garbage.txt"), "not json\n\n{\"event_ts\": \"broken\n")
-      in.toString
-    })
+    zone(spark, dir, prefix, cutoffDate)(writeWire(spark, dir, cutoffDate, _))
 
   /** EP3 batch KPI job over JSONL raw — schema-on-read, PERMISSIVE
     * corrupt-record drop, group-by-day aggregation (A1–A6 on the real
@@ -97,35 +108,20 @@ object PipelineQueries {
     * RawIngest sink layout (S5), produced by a plain batch write so
     * the partition-prune gate times the SCAN, not ingest machinery. */
   private[graft] def writePartitionedZone(spark: SparkSession, dir: String): String =
-    zoneCache.getOrElseUpdate(("graft-rawzone", dir, None), {
-    val out = Files.createTempDirectory("graft-rawzone")
-    out.toFile.deleteOnExit()
-    load(spark, dir, "events")
-      .where(to_date(col("ts")) < lit(StreamCutoff))
-      .select(
-        concat(date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")).as("event_ts"),
-        col("user_id").cast("string").as("user_id"),
-        col("event_id").cast("string").as("session_id"),
-        col("event_type"),
-        col("value").as("price"),
-        date_format(col("ts"), "yyyy-MM-dd").as("date"),
-        date_format(col("ts"), "HH").as("hour"))
-      .repartition(col("date"), col("hour"))
-      .write.mode("overwrite").partitionBy("date", "hour")
-      .format("json").save(out.toString)
-    out.toString
-  })
+    hourZone(spark, dir, "graft-rawzone")(_.repartition(col("date"), col("hour")))
 
   /** Fragmented variant of the partitioned zone — 12 files per
     * (date, hour) dir, the state a minutely-triggered streaming sink
     * leaves behind (each task writes into every partition it holds
     * rows for; the deliberately-unkeyed repartition(12) reproduces
-    * that). Fixture setup, built once per JVM. */
+    * that). */
   private[graft] def writeFragmentedZone(spark: SparkSession, dir: String): String =
-    zoneCache.getOrElseUpdate(("graft-fragzone", dir, None), {
-      val out = Files.createTempDirectory("graft-fragzone")
-      out.toFile.deleteOnExit()
-      load(spark, dir, "events")
+    hourZone(spark, dir, "graft-fragzone")(_.repartition(12))
+
+  private def hourZone(spark: SparkSession, dir: String, prefix: String)(
+      spread: DataFrame => DataFrame): String =
+    zone(spark, dir, prefix) { z =>
+      spread(load(spark, dir, "events")
         .where(to_date(col("ts")) < lit(StreamCutoff))
         .select(
           concat(date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")).as("event_ts"),
@@ -134,12 +130,10 @@ object PipelineQueries {
           col("event_type"),
           col("value").as("price"),
           date_format(col("ts"), "yyyy-MM-dd").as("date"),
-          date_format(col("ts"), "HH").as("hour"))
-        .repartition(12)
+          date_format(col("ts"), "HH").as("hour")))
         .write.mode("overwrite").partitionBy("date", "hour")
-        .format("json").save(out.toString)
-      out.toString
-    })
+        .format("json").save(z.toString)
+    }
 
   /** Small-files compaction under the oracle gate (batch/Compaction):
     * the fragmented zone (12 files per partition dir) is compacted to
@@ -150,8 +144,7 @@ object PipelineQueries {
     * lines, which a parsing compactor would destroy). */
   def compactKpis(spark: SparkSession, dir: String): DataFrame = {
     val frag = writeFragmentedZone(spark, dir)
-    val out = Files.createTempDirectory("graft-compact-out")
-    out.toFile.deleteOnExit()
+    val out = tempDir("graft-compact-out")
     graft.batch.Compaction.compactZone(spark, frag, out.toString)
     DailyKpis.compute(spark, out.toString)
       .select(col("dt"), col("total_events"), col("unique_users"),
@@ -198,6 +191,20 @@ object PipelineQueries {
       .orderBy(col("date"))
   }
 
+  /** Hot-key stats of lineitem, memoized per lineitem snapshot (the
+    * ANALYZE-TABLE discipline: the skew sketch is a table statistic
+    * refreshed per stats cycle and reused by every join on the fact,
+    * not a scan paid per query). The set is broadcast-sized by
+    * construction (≤ |fact|/threshold keys), so caching the collected
+    * values is the same driver-side footprint the broadcast already
+    * requires. */
+  private[graft] def hotKeys(spark: SparkSession, dir: String): Array[Long] =
+    graft.Artifacts.memo("hot-keys", spark, dir, Seq("lineitem")) {
+      SaltedJoin.hotKeys(load(spark, dir, "lineitem"), "l_orderkey",
+          hotKeyThreshold = 1000L, sampleFraction = 0.05)
+        .collect().map(_.getLong(0))
+    }
+
   /** Skew-salted join under the oracle gate: the salted fact⋈dim join
     * must produce exactly the plain join's result (the oracle IS the
     * plain SQL join). Configured the way production would be: the hot
@@ -208,24 +215,12 @@ object PipelineQueries {
     * no skew. The hot path itself (salt fan-out + dim replication +
     * pass-through union) is exercised by SaltedJoinSpec's synthetic
     * 10k-row hot key and mixed-threshold fixtures. */
-  /** Hot-key stats, memoized per fixture dir (the ANALYZE-TABLE
-    * discipline: the skew sketch is a table statistic refreshed per
-    * stats cycle and reused by every join on the fact, not a scan paid
-    * per query). The set is broadcast-sized by construction
-    * (≤ |fact|/threshold keys), so caching the collected values is the
-    * same driver-side footprint the broadcast already requires. */
-  private val hotKeyCache = scala.collection.concurrent.TrieMap.empty[String, Array[Long]]
-
   def saltedJoin(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val li = load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
     val ord = load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
-    val hotVals = hotKeyCache.getOrElseUpdate(dir,
-      SaltedJoin.hotKeys(li, "l_orderkey",
-          hotKeyThreshold = 1000L, sampleFraction = 0.05)
-        .collect().map(_.getLong(0)))
+    val hotVals = hotKeys(spark, dir)
     SaltedJoin.join(li, ord, "l_orderkey", "o_orderkey",
         saltFactor = 8, saltOn = Seq(col("l_orderkey"), col("l_linenumber")),
         hotKeyValues = Some(hotVals.toSeq))
@@ -272,12 +267,8 @@ object PipelineQueries {
         Dataset[graft.streaming.StatefulSessions.SessionOut]): DataFrame = {
     import spark.implicits._
     import graft.streaming.StatefulSessions
-    val ck = Files.createTempDirectory("graft-sess-ck")
-    val out = Files.createTempDirectory("graft-sess-out")
-    Seq(ck, out).foreach(_.toFile.deleteOnExit())
-    val in = zoneCache.getOrElseUpdate(("graft-sess-in", dir, Some(SessionCutoff)), {
-      val inDir = Files.createTempDirectory("graft-sess-in")
-      inDir.toFile.deleteOnExit()
+    val (ck, out) = (tempDir("graft-sess-ck"), tempDir("graft-sess-out"))
+    val in = zone(spark, dir, "graft-sess-in", Some(SessionCutoff)) { inDir =>
       // bounded to the first 10 event-days (identical code path; the
       // streaming machinery's fixed cost dominates past this size)
       val ev = load(spark, dir, "events")
@@ -291,8 +282,7 @@ object PipelineQueries {
       ev.unionByName(sentinels)
         .select(to_json(struct(col("user_id"), col("ts"))).as("value"))
         .coalesce(2).write.mode("overwrite").text(inDir.toString)
-      inDir.toString
-    })
+    }
     val src = spark.readStream.schema("user_id STRING, ts TIMESTAMP")
       .json(in).as[StatefulSessions.SessionEvent]
     // Trigger.Once: the global sentinel closes every real session
@@ -333,9 +323,7 @@ object PipelineQueries {
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val in = writeJsonl(spark, dir, "graft-enrich-in", cutoffDate = Some(StreamCutoff))
-    val out = Files.createTempDirectory("graft-enrich-out")
-    val ck = Files.createTempDirectory("graft-enrich-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-enrich-out"), tempDir("graft-enrich-ck"))
     val dim = EnrichDim.toDF("et", "category")
     val q = spark.readStream.schema(graft.model.EventSchema.schema).json(in)
       .withColumn("et", lower(coalesce(col("event_type"), lit(""))))
@@ -367,9 +355,7 @@ object PipelineQueries {
     * same oracle. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val in = dedupInZone(spark, dir)
-    val out = Files.createTempDirectory("graft-dedup-out")
-    val ck = Files.createTempDirectory("graft-dedup-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-dedup-out"), tempDir("graft-dedup-ck"))
     withShufflePartitions(spark, 8) {
       val q = spark.readStream.schema(graft.model.EventSchema.schema).json(in)
         .dropDuplicates("session_id") // wire session_id carries event_id
@@ -388,13 +374,12 @@ object PipelineQueries {
   /** The at-least-once feed with a duplicated 500-line prefix appended
     * (re-delivery simulation), shared by both dedup regimes. */
   private def dedupInZone(spark: SparkSession, dir: String): String =
-    zoneCache.getOrElseUpdate(("graft-dedup-in", dir, Some(StreamCutoff)), {
-      val zone = writeJsonl(spark, dir, "graft-dedup-in-base", cutoffDate = Some(StreamCutoff))
+    zone(spark, dir, "graft-dedup-in", Some(StreamCutoff)) { z =>
+      writeWire(spark, dir, Some(StreamCutoff), z)
       // simulate at-least-once re-delivery: duplicate a prefix of the feed
       asWireJson(spark, dir, Some(StreamCutoff)).limit(500)
-        .coalesce(1).write.mode("append").text(zone)
-      zone
-    })
+        .coalesce(1).write.mode("append").text(z.toString)
+    }
 
   /** The UNBOUNDED-stream dedup regime executed (r8): the same
     * at-least-once feed deduped with `dropDuplicatesWithinWatermark` —
@@ -412,9 +397,7 @@ object PipelineQueries {
     * batches (a single batch would dedup trivially at watermark 0). */
   def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
     val in = dedupInZone(spark, dir)
-    val out = Files.createTempDirectory("graft-dedupwm-out")
-    val ck = Files.createTempDirectory("graft-dedupwm-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-dedupwm-out"), tempDir("graft-dedupwm-ck"))
     withShufflePartitions(spark, 8) {
       val q = spark.readStream.schema(graft.model.EventSchema.schema)
         .option("maxFilesPerTrigger", 2)
@@ -435,6 +418,27 @@ object PipelineQueries {
       .orderBy(col("dt"))
   }
 
+  /** The interval joins' input: only the event types either join side
+    * consumes (the upstream-producer-publishes-relevant-topics shape),
+    * sliced to JoinCutoff — the join semantics are identical, the gates
+    * just stop paying to stream-scan rows neither side can match. The
+    * stream-side type filters stay: the zone pre-filter is an
+    * optimization, not a correctness dependency. */
+  private def joinInZone(spark: SparkSession, dir: String): String =
+    zone(spark, dir, "graft-sjoin-in", Some(JoinCutoff)) { z =>
+      load(spark, dir, "events")
+        .where(to_date(col("ts")) < lit(JoinCutoff) &&
+          lower(coalesce(col("event_type"), lit(""))).isin("view", "click", "purchase"))
+        .select(to_json(struct(
+          concat(date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")).as("event_ts"),
+          col("user_id").cast("string").as("user_id"),
+          col("event_id").cast("string").as("session_id"),
+          col("event_type"),
+          col("value").as("price"))).as("value"))
+        .coalesce(2).write.mode("overwrite").text(z.toString)
+      Files.writeString(z.resolve("garbage.txt"), Garbage)
+    }
+
   /** Stream-stream event-time interval join (SURVEY.md §2.9 — the
     * attribution-join shape): purchases join the same user's views
     * within the preceding hour, both sides watermarked so Spark can
@@ -446,31 +450,8 @@ object PipelineQueries {
     * the fixture with identical (second-truncated) timestamps. */
   @nowarn("cat=deprecation") // Trigger.Once is the deliberate choice (see in-method comment); deprecation acknowledged
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    // dedicated zone: only the event types either join side consumes
-    // (the upstream-producer-publishes-relevant-topics shape), sliced
-    // to JoinCutoff — the join semantics are identical, the gate just
-    // stops paying to stream-scan rows neither side can match. The
-    // stream-side type filters stay: the zone pre-filter is an
-    // optimization, not a correctness dependency.
-    val in = zoneCache.getOrElseUpdate(("graft-sjoin-in", dir, Some(JoinCutoff)), {
-      val inDir = Files.createTempDirectory("graft-sjoin-in")
-      inDir.toFile.deleteOnExit()
-      val all = load(spark, dir, "events")
-      all.where(to_date(col("ts")) < lit(JoinCutoff) &&
-          lower(coalesce(col("event_type"), lit(""))).isin("view", "click", "purchase"))
-        .select(to_json(struct(
-          concat(date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")).as("event_ts"),
-          col("user_id").cast("string").as("user_id"),
-          col("event_id").cast("string").as("session_id"),
-          col("event_type"),
-          col("value").as("price"))).as("value"))
-        .coalesce(2).write.mode("overwrite").text(inDir.toString)
-      Files.writeString(inDir.resolve("garbage.txt"), "not json\n\n{\"event_ts\": \"broken\n")
-      inDir.toString
-    })
-    val out = Files.createTempDirectory("graft-sjoin-out")
-    val ck = Files.createTempDirectory("graft-sjoin-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val in = joinInZone(spark, dir)
+    val (out, ck) = (tempDir("graft-sjoin-out"), tempDir("graft-sjoin-ck"))
     def side(types: Seq[String], user: String, ts: String) =
       spark.readStream.schema(graft.model.EventSchema.schema).json(in)
         .withColumn("ts0", to_timestamp(col("event_ts")))
@@ -558,25 +539,8 @@ object PipelineQueries {
     * horizon — the deterministic window both engines can agree on. */
   @nowarn("cat=deprecation")
   def streamJoinOuter(spark: SparkSession, dir: String): DataFrame = {
-    val in = zoneCache.getOrElseUpdate(("graft-sjoin-in", dir, Some(JoinCutoff)), {
-      val inDir = Files.createTempDirectory("graft-sjoin-in")
-      inDir.toFile.deleteOnExit()
-      val all = load(spark, dir, "events")
-      all.where(to_date(col("ts")) < lit(JoinCutoff) &&
-          lower(coalesce(col("event_type"), lit(""))).isin("view", "click", "purchase"))
-        .select(to_json(struct(
-          concat(date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")).as("event_ts"),
-          col("user_id").cast("string").as("user_id"),
-          col("event_id").cast("string").as("session_id"),
-          col("event_type"),
-          col("value").as("price"))).as("value"))
-        .coalesce(2).write.mode("overwrite").text(inDir.toString)
-      Files.writeString(inDir.resolve("garbage.txt"), "not json\n\n{\"event_ts\": \"broken\n")
-      inDir.toString
-    })
-    val out = Files.createTempDirectory("graft-sjoino-out")
-    val ck = Files.createTempDirectory("graft-sjoino-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val in = joinInZone(spark, dir)
+    val (out, ck) = (tempDir("graft-sjoino-out"), tempDir("graft-sjoino-ck"))
     def side(types: Seq[String], user: String, ts: String) =
       spark.readStream.schema(graft.model.EventSchema.schema).json(in)
         .withColumn("ts0", to_timestamp(col("event_ts")))
@@ -620,9 +584,7 @@ object PipelineQueries {
     * original parquet. Exercises the format surface (quoting, null
     * round-trip, timestamp parse) that JSONL/parquet gates don't. */
   def csvScan(spark: SparkSession, dir: String): DataFrame = {
-    val zone = zoneCache.getOrElseUpdate(("graft-csv", dir, None), {
-      val z = Files.createTempDirectory("graft-csv")
-      z.toFile.deleteOnExit()
+    val csv = zone(spark, dir, "graft-csv") { z =>
       load(spark, dir, "events")
         .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
           col("user_id"), col("event_type"), col("value"))
@@ -634,14 +596,13 @@ object PipelineQueries {
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")
         .option("header", "true").csv(z.toString)
-      z.toString
-    })
+    }
     spark.read
       .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
       .option("header", "true")
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
-      .csv(zone)
+      .csv(csv)
       .groupBy(coalesce(col("event_type"), lit("")).as("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -659,16 +620,13 @@ object PipelineQueries {
     * conventions); the oracle is the identical SQL over the original
     * parquet fixture — byte-equal rows prove the round trip. */
   def orcScan(spark: SparkSession, dir: String): DataFrame = {
-    val zone = zoneCache.getOrElseUpdate(("graft-orc", dir, None), {
-      val z = Files.createTempDirectory("graft-orc")
-      z.toFile.deleteOnExit()
+    val orc = zone(spark, dir, "graft-orc", source = "lineitem") { z =>
       load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_shipdate"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"))
         .coalesce(4).write.mode("overwrite").orc(z.toString)
-      z.toString
-    })
-    spark.read.orc(zone)
+    }
+    spark.read.orc(orc)
       .where(col("l_shipdate") >= lit("1997-07-01").cast("timestamp"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
@@ -690,9 +648,7 @@ object PipelineQueries {
     * oracle-visible; batches are carved by orderkey parity so the
     * split is deterministic at every scale. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val zone = zoneCache.getOrElseUpdate(("graft-schevo", dir, None), {
-      val z = Files.createTempDirectory("graft-schevo")
-      z.toFile.deleteOnExit()
+    val evo = zone(spark, dir, "graft-schevo", source = "orders") { z =>
       val ord = load(spark, dir, "orders")
       ord.where(pmod(col("o_orderkey"), lit(2)) === 1)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -700,10 +656,9 @@ object PipelineQueries {
       ord.where(pmod(col("o_orderkey"), lit(2)) === 0)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .coalesce(2).write.mode("overwrite").parquet(z.resolve("batch=2").toString)
-      z.toString
-    })
+    }
     spark.read.option("mergeSchema", "true")
-      .option("basePath", zone).parquet(s"$zone/batch=1", s"$zone/batch=2")
+      .option("basePath", evo).parquet(s"$evo/batch=1", s"$evo/batch=2")
       .groupBy(coalesce(col("o_orderpriority"), lit("<missing>")).as("priority"))
       .agg(count(lit(1)).as("n_orders"),
         graft.functions.F.roundBin(sum(col("o_totalprice")), 2).as("total"))
@@ -722,9 +677,7 @@ object PipelineQueries {
     * path, and the oracle applies the same cutoff. */
   def streamHourly(spark: SparkSession, dir: String): DataFrame = {
     val in = writeJsonl(spark, dir, "graft-ingest-in", cutoffDate = Some(HourlyCutoff))
-    val out = Files.createTempDirectory("graft-ingest-out")
-    val ck = Files.createTempDirectory("graft-ingest-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-ingest-out"), tempDir("graft-ingest-ck"))
     withShufflePartitions(spark, 8) {
       RawIngest.runOnce(spark, in, out.toString, ck.toString)
     }
@@ -773,9 +726,7 @@ object PipelineQueries {
   private[graft] def streamUpsertKpisCounted(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
     val in = writeJsonl(spark, dir, "graft-upsert-in", cutoffDate = Some(StreamCutoff))
-    val out = Files.createTempDirectory("graft-upsert-out")
-    val ck = Files.createTempDirectory("graft-upsert-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-upsert-out"), tempDir("graft-upsert-ck"))
     val n = upsertDrain(spark, in, out.toString, ck.toString)
     val table = spark.read.parquet(out.toString)
       // partition-column type inference may read dt as DATE
@@ -882,9 +833,7 @@ object PipelineQueries {
   private[graft] def streamSketchTableCounted(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
     val in = writeJsonl(spark, dir, "graft-sksync-in", cutoffDate = Some(StreamCutoff))
-    val out = Files.createTempDirectory("graft-sksync-out")
-    val ck = Files.createTempDirectory("graft-sksync-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-sksync-out"), tempDir("graft-sksync-ck"))
     val n = sketchMaintenanceDrain(spark, in, out.toString, ck.toString)
     val table = spark.read.parquet(out.toString)
       .select(col("dt").cast("string").as("dt"),
@@ -997,17 +946,14 @@ object PipelineQueries {
     * maxFilesPerTrigger=1 yields three micro-batches whose union is
     * the whole corpus. */
   private def docsZone(spark: SparkSession, dir: String): String =
-    zoneCache.getOrElseUpdate(("graft-docs-zone", dir, None), {
-      val out = Files.createTempDirectory("graft-docs-zone")
-      out.toFile.deleteOnExit()
+    zone(spark, dir, "graft-docs-zone", source = "documents") { out =>
       val docs = load(spark, dir, "documents").select(col("doc_id"), col("text"))
       (0 until 3).foreach { k =>
         docs.where(pmod(col("doc_id"), lit(3)) === k)
           .select(to_json(struct(col("doc_id"), col("text"))).as("value"))
           .coalesce(1).write.mode("append").text(out.toString)
       }
-      out.toString
-    })
+    }
 
   /** ST × E2 streaming incremental NEAR-dup (r10): documents arrive
     * in micro-batches; each batch is trigram-fingerprinted, probed
@@ -1036,10 +982,7 @@ object PipelineQueries {
   private[graft] def streamNearDupCounted(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
     val in = docsZone(spark, dir)
-    val outP = Files.createTempDirectory("graft-neardup-out")
-    val idxP = Files.createTempDirectory("graft-neardup-idx")
-    val ckP = Files.createTempDirectory("graft-neardup-ck")
-    Seq(outP, idxP, ckP).foreach(_.toFile.deleteOnExit())
+    val Seq(outP, idxP, ckP) = Seq("out", "idx", "ck").map(k => tempDir(s"graft-neardup-$k"))
     val n = nearDupDrain(spark, in, outP.toString, idxP.toString, ckP.toString)
     (nearDupManifest(spark, outP.toString), n)
   }
@@ -1151,9 +1094,7 @@ object PipelineQueries {
   private[graft] def streamDriftPsiCounted(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
     val in = writeJsonl(spark, dir, "graft-drift-in", cutoffDate = Some(StreamCutoff))
-    val out = Files.createTempDirectory("graft-drift-out")
-    val ck = Files.createTempDirectory("graft-drift-ck")
-    out.toFile.deleteOnExit(); ck.toFile.deleteOnExit()
+    val (out, ck) = (tempDir("graft-drift-out"), tempDir("graft-drift-ck"))
     val n = driftCountDrain(spark, in, out.toString, ck.toString)
     (ExperimentQueries.psiOfCounts(driftCountTable(spark, out.toString)), n)
   }

@@ -28,10 +28,9 @@ import graft.model.EventPredicates.isPurchase
   * production 128 MiB default) so the skipping is observable and
   * spec-asserted at small scale.
   *
-  * The layout is built once per (process, sf dir) — idempotent like
-  * BucketedJoin.ensureBucketed: steady-state timings measure the
-  * query, not the write, exactly the production layout-job/query
-  * split.
+  * The layout is built once per events snapshot ([[graft.Artifacts]]):
+  * steady-state timings measure the query, not the write, exactly the
+  * production layout-job/query split.
   */
 object SortedLayout {
   /** Fixture row-group size: small enough that a 3-day predicate over
@@ -39,14 +38,10 @@ object SortedLayout {
     * leaves the parquet default (one group ≈ one HDFS block). */
   val FixtureRowGroupBytes: Int = 64 * 1024
 
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Write-once ts-sorted events layout; returns its path. */
   private[graft] def ensureSorted(spark: SparkSession, dir: String): String =
-    layoutCache.getOrElseUpdate(dir, {
-      val zone = java.nio.file.Files.createTempDirectory("graft-sorted")
-      zone.toFile.deleteOnExit()
-      val out = zone.resolve("events").toString
+    graft.Artifacts.memo("sorted-layout", spark, dir, Seq("events")) {
+      val out = graft.Artifacts.tempDir("graft-sorted").resolve("events").toString
       // TIMESTAMP_MICROS, not Spark's legacy INT96 default: INT96
       // columns carry NO parquet min/max statistics and no filter
       // pushdown — with the default, the zone maps this layout exists
@@ -62,7 +57,7 @@ object SortedLayout {
           .parquet(out)
       }
       out
-    })
+    }
 
   /** Reader for the sorted layout (plain parquet — ts was normalized
     * to TimestampType by Tables.load before the write). */

@@ -303,19 +303,16 @@ object TextQueries {
   }
 
   /** Memoized trained-tokenizer artifact (merge table + fully-merged
-    * vocab), once per (app, dir, steps) — the centroidCache
+    * vocab), once per (steps, documents snapshot) — the centroids
     * discipline: training is an OFFLINE build whose product every
     * encode call reuses; [[bpeTrain]] itself stays live so the
     * training query keeps measuring training. */
-  private val bpeArtifactCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (Seq[(Int, String, String, Long)], DataFrame)]
   private def bpeArtifacts(spark: SparkSession, dir: String,
       steps: Int): (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeArtifactCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, steps), {
-        val (m, v) = bpeTrainCore(spark, dir, steps)
-        (m, v.localCheckpoint())
-      })
+    graft.Artifacts.memo("bpe", spark, dir, Seq("documents"), steps) {
+      val (m, v) = bpeTrainCore(spark, dir, steps)
+      (m, v.localCheckpoint())
+    }
 
   /** E4/E6 (r14) BPE ENCODE — the serving half of [[bpeTrain]]: the
     * trained tokenizer's segmentation of every corpus word, with its
@@ -1012,27 +1009,19 @@ object TextQueries {
 
   /** Memoized corpus-side window-fingerprint index for the
     * incremental substring probe: the DISTINCT fp set of the indexed
-    * (even-id) half, checkpointed once per (app, dir, w, snapshot) —
+    * (even-id) half, checkpointed once per (w, documents snapshot) —
     * the membership artifact a crawl maintains (a full posting table
     * with positions serves the span-attribution side; the probe only
     * needs membership). */
-  private val substrIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (String, DataFrame)]
   private[graft] def substrFpIndex(spark: SparkSession, dir: String,
                                    w: Int = 8): DataFrame = {
     graft.functions.GraftFunctions.install(spark)
-    val key = (spark.sparkContext.applicationId, dir, w)
-    val ver = graft.operators.DupClusters.corpusVersion(dir)
-    substrIdxCache.get(key) match {
-      case Some((v, idx)) if v == ver => idx
-      case _ =>
-        val idx = withTokens(load(spark, dir, "documents"))
-          .where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(col("doc_id"), expr(s"ngram_hash_pos(toks, $w)"))
-          .select(col("fp")).distinct()
-          .localCheckpoint()
-        substrIdxCache.put(key, (ver, idx))
-        idx
+    graft.Artifacts.memo("substr-fp-index", spark, dir, Seq("documents"), w) {
+      withTokens(load(spark, dir, "documents"))
+        .where(pmod(col("doc_id"), lit(2)) === 0)
+        .select(col("doc_id"), expr(s"ngram_hash_pos(toks, $w)"))
+        .select(col("fp")).distinct()
+        .localCheckpoint()
     }
   }
 
@@ -1236,25 +1225,20 @@ object TextQueries {
 
   /** Memoized exact J >= 1/2 pair manifest — the ground truth
     * [[minhashDedup]] emits and audits against, computed once per
-    * (app, dir) via the ZERO-false-negative prefix filter. Kept as a
-    * CHECKPOINTED DataFrame, never a driver array (r14 — the r13
-    * collect-based form was q_minhash_dedup's skew residual: an
-    * adversarial mass-duplicate corpus makes this set ~500k pairs, and
-    * a driver array re-enters every audit/emission as a multi-MB
-    * LocalRelation serialized into each task): the audits semi-/anti-
+    * documents snapshot via the ZERO-false-negative prefix filter. Kept
+    * as a CHECKPOINTED DataFrame, never a driver array: an adversarial
+    * mass-duplicate corpus makes this set ~500k pairs, and a driver
+    * array would re-enter every audit/emission as a multi-MB
+    * LocalRelation serialized into each task. The audits semi-/anti-
     * join against it executor-side, the gated query emits it directly.
     * The exhaustive pair COUNT rides the memo for the recall divisor
-    * and the zero-pair guard. Keys on the fixture dir and assumes
-    * immutability; a live pipeline would key on a snapshot/version id. */
-  private val exactHalfDfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, Long)]
+    * and the zero-pair guard. */
   private def exactHalfPairs(
       spark: SparkSession, dir: String): (DataFrame, Long) =
-    exactHalfDfCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir), {
-        val df = exactSimJoin(spark, dir, 1, 2).localCheckpoint()
-        (df, df.count())
-      })
+    graft.Artifacts.memo("exact-half-pairs", spark, dir, Seq("documents")) {
+      val df = exactSimJoin(spark, dir, 1, 2).localCheckpoint()
+      (df, df.count())
+    }
 
   /** Per-doc distinct trigram-shingle hash sets. */
   private[graft] def simJoinSets(spark: SparkSession, dir: String): DataFrame = {
@@ -1285,27 +1269,18 @@ object TextQueries {
   /** Memoized shingle document-frequency table — the GLOBAL rarity
     * order every prefix filter sorts by. A pure function of the corpus
     * snapshot and exactly the kind of statistic ANALYZE maintains (the
-    * saltedJoin hotKeyCache discipline): at 100 TB the df table is the
+    * saltedJoin hot-key discipline): at 100 TB the df table is the
     * maintained vocab-grain artifact the AllPairs docstrings already
-    * promise; before r14 every prefix-filtered query re-aggregated it
-    * from a fresh corpus explode (~0.4 s of the gate, × 3 live
-    * consumers). Checkpointed, vocab-grain (27k rows at sf0.1). */
-  private val shingleDfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, DataFrame)]
-  private def shingleDf(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    val ver = DupClusters.corpusVersion(dir)
-    shingleDfCache.get(key) match {
-      case Some((v, df)) if v == ver => df
-      case _ =>
-        val df = simJoinSets(spark, dir)
-          .select(explode(col("s")).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .localCheckpoint()
-        shingleDfCache.put(key, (ver, df))
-        df
+    * promise, not a corpus explode per prefix-filtered query (~0.4 s of
+    * the gate, × 3 live consumers). Checkpointed, vocab-grain (27k rows
+    * at sf0.1). */
+  private[graft] def shingleDf(spark: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.memo("shingle-df", spark, dir, Seq("documents")) {
+      simJoinSets(spark, dir)
+        .select(explode(col("s")).as("h"))
+        .groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .localCheckpoint()
     }
-  }
 
   private[graft] def prefixCandidates(spark: SparkSession, dir: String, t: Double): DataFrame = {
     val shingles = simJoinSets(spark, dir)
@@ -1366,63 +1341,50 @@ object TextQueries {
     * result-sized pair manifest (r12: at quadratic-output corpora —
     * the skew probe's 500k-pair clique — a second precision collect
     * was a measurable slice of the gate). */
-  /** Memoized exact-dup member map for the minhash funnel (r13,
-    * verdict item 1 — the [[VectorQueries]] memberMapCache twin):
-    * tokenize + fingerprint + by-value window + checkpoint + dup-free
-    * count ran on every q_minhash_dedup invocation; the map is a pure
-    * function of the documents snapshot, so it builds once per
-    * (app, dir, version). Stale snapshots replace the entry (old
-    * checkpoint blocks become ContextCleaner-collectable). */
-  private val minhashMemberCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, DataFrame, Boolean)]
-
-  private def minhashMemberMap(
-      spark: SparkSession, dir: String): (DataFrame, Boolean) = {
-    val key = (spark.sparkContext.applicationId, dir)
-    val ver = DupClusters.corpusVersion(dir)
-    minhashMemberCache.get(key) match {
-      case Some((v, m, dupFree)) if v == ver => (m, dupFree)
-      case _ =>
-        val docsAll = withTokens(load(spark, dir, "documents"))
-          .where(size(col("toks")) >= 3)
-          // fused native 3-gram fingerprints: sorted (for the
-          // jaccard_ge merge-walk verifier) distinct 8-byte hashes —
-          // the signature, banding, and candidate verification all
-          // consume these, so no shingle string is ever built or cached
-          .withColumn("sh", F.ngramHashes(col("toks"), 3))
-          .select(col("doc_id"), col("sh"))
-        // EXACT-DUP PRE-COLLAPSE (r12, from the skew probe's 12.5×
-        // finding): identical shingle SETS have identical signatures,
-        // so a 1000-copy text clique used to put all m copies in the
-        // same band bucket and generate + merge-walk-verify the same
-        // m²/2 pairs per band. Grouping by the shingle-array VALUE
-        // (content equality — no hash-collision risk) runs banding +
-        // verification once per DISTINCT fingerprint; found rep pairs
-        // expand back over member lists; within-group pairs (always
-        // candidates, always J = 1) are emitted through the same
-        // kernel. Found-pair set exactly preserved; this is also the
-        // production ordering — exact dedup before near-dup. The
-        // checkpoint materializes the grouped fingerprints once for
-        // the three downstream consumers (banding + both candidate
-        // join-backs) and, since r13, across invocations.
-        val members = {
-          import org.apache.spark.sql.expressions.Window
-          docsAll
-            .withColumn("rep_id",
-              min(col("doc_id")).over(Window.partitionBy(col("sh"))))
-            .localCheckpoint()
-        }
-        // dup-free flag off the materialized checkpoint; coalesce (r12
-        // advisor): sum() over a corpus where every doc has < 3 tokens
-        // is NULL and getLong threw — empty input is dup-free.
-        val counts = members.agg(count(lit(1)),
-          coalesce(sum(when(col("doc_id") === col("rep_id"), 1L)
-            .otherwise(0L)), lit(0L))).head()
-        val dupFree = counts.getLong(0) == counts.getLong(1)
-        minhashMemberCache.put(key, (ver, members, dupFree))
-        (members, dupFree)
+  /** Memoized exact-dup member map for the minhash funnel (the
+    * [[VectorQueries.memberMapFor]] twin): tokenize + fingerprint +
+    * by-value window + checkpoint + dup-free count is a pure function
+    * of the documents snapshot, so it builds once per snapshot. */
+  private[graft] def minhashMemberMap(
+      spark: SparkSession, dir: String): (DataFrame, Boolean) =
+    graft.Artifacts.memo("minhash-member-map", spark, dir, Seq("documents")) {
+      val docsAll = withTokens(load(spark, dir, "documents"))
+        .where(size(col("toks")) >= 3)
+        // fused native 3-gram fingerprints: sorted (for the
+        // jaccard_ge merge-walk verifier) distinct 8-byte hashes —
+        // the signature, banding, and candidate verification all
+        // consume these, so no shingle string is ever built or cached
+        .withColumn("sh", F.ngramHashes(col("toks"), 3))
+        .select(col("doc_id"), col("sh"))
+      // EXACT-DUP PRE-COLLAPSE (r12, from the skew probe's 12.5×
+      // finding): identical shingle SETS have identical signatures,
+      // so a 1000-copy text clique used to put all m copies in the
+      // same band bucket and generate + merge-walk-verify the same
+      // m²/2 pairs per band. Grouping by the shingle-array VALUE
+      // (content equality — no hash-collision risk) runs banding +
+      // verification once per DISTINCT fingerprint; found rep pairs
+      // expand back over member lists; within-group pairs (always
+      // candidates, always J = 1) are emitted through the same
+      // kernel. Found-pair set exactly preserved; this is also the
+      // production ordering — exact dedup before near-dup. The
+      // checkpoint materializes the grouped fingerprints once for
+      // the three downstream consumers (banding + both candidate
+      // join-backs) and across invocations.
+      val members = {
+        import org.apache.spark.sql.expressions.Window
+        docsAll
+          .withColumn("rep_id",
+            min(col("doc_id")).over(Window.partitionBy(col("sh"))))
+          .localCheckpoint()
+      }
+      // dup-free flag off the materialized checkpoint; coalesce: sum()
+      // over a corpus where every doc has < 3 tokens is NULL and
+      // getLong would throw — empty input is dup-free.
+      val counts = members.agg(count(lit(1)),
+        coalesce(sum(when(col("doc_id") === col("rep_id"), 1L)
+          .otherwise(0L)), lit(0L))).head()
+      (members, counts.getLong(0) == counts.getLong(1))
     }
-  }
 
   private def minhashDedupAll(
       spark: SparkSession, dir: String): (DataFrame, Double, Boolean) = {
@@ -1570,9 +1532,9 @@ object TextQueries {
         expr(
           s"size(filter(zip_with(a_sig, b_sig, (x, y) -> x = y), v -> v)) / cast($SourcePerms as double)")
           .as("est"))
-    // exact ground truth: a per-dir STATISTIC (like bruteTop10Ids /
-    // the exact pair caches) — the |sources|²-row grid is computed
-    // once per (process, dir) and joined back broadcast-local, so the
+    // exact ground truth: a table STATISTIC (like bruteTop10Ids /
+    // the exact pair memos) — the |sources|²-row grid is computed
+    // once per documents snapshot and joined back broadcast-local, so the
     // steady-state query cost is the signature path alone
     import spark.implicits._
     val grid = exactSourceGrid(spark, dir).toSeq
@@ -1589,10 +1551,8 @@ object TextQueries {
     * equi-join, |∪| = na + nb − |∩|, full pair grid (zero-overlap
     * pairs included) from a broadcast |sources|×|sources| size join.
     * Result-sized collect (|sources|² rows). */
-  private val srcGridCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(String, String, Double)]]
-  private def exactSourceGrid(spark: SparkSession, dir: String): Array[(String, String, Double)] =
-    srcGridCache.getOrElseUpdate(dir, {
+  private[graft] def exactSourceGrid(spark: SparkSession, dir: String): Array[(String, String, Double)] =
+    graft.Artifacts.memo("source-grid", spark, dir, Seq("documents")) {
       val docs = withTokens(load(spark, dir, "documents"))
         .where(size(col("toks")) >= 3)
         .withColumn("sh", F.ngramHashes(col("toks"), 3))
@@ -1611,7 +1571,7 @@ object TextQueries {
             (col("na") + col("nb") - coalesce(col("ix"), lit(0L))).cast("double"))
             .as("exact"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    })
+    }
 
   /** Corpus-rollup signature width: 128 perms (the classic MinHash
     * operating point — sd = 1/(2sqrt(128)) ≈ 0.044) rather than the

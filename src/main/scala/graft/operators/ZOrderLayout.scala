@@ -29,8 +29,6 @@ import graft.model.EventPredicates.isPurchase
 object ZOrderLayout {
   val FixtureRowGroupBytes: Int = 16 * 1024
 
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Scale a numeric column into [0, 2^21) given its domain bounds —
     * Long arithmetic throughout (no double rounding drift); constant
     * domains collapse to coordinate 0. */
@@ -40,10 +38,8 @@ object ZOrderLayout {
 
   /** Write-once Morton-clustered events layout; returns its path. */
   private[graft] def ensureZOrdered(spark: SparkSession, dir: String): String =
-    layoutCache.getOrElseUpdate(dir, {
-      val zone = java.nio.file.Files.createTempDirectory("graft-zorder")
-      zone.toFile.deleteOnExit()
-      val out = zone.resolve("events").toString
+    graft.Artifacts.memo("zorder-layout", spark, dir, Seq("events")) {
+      val out = graft.Artifacts.tempDir("graft-zorder").resolve("events").toString
       val ev = graft.Tables.load(spark, dir, "events")
       // one stats pass for the dimension domains (row-group min/max
       // make this a footer read at production scale)
@@ -64,7 +60,7 @@ object ZOrderLayout {
           .parquet(out)
       }
       out
-    })
+    }
 
   private[graft] def zOrderedEvents(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(ensureZOrdered(spark, dir))

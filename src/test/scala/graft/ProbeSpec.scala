@@ -25,7 +25,7 @@ class ProbeSpec extends SparkSpec {
           assert(Files.mismatch(Paths.get(sf, s"$t.parquet"),
             Paths.get(zone, s"$t.parquet")) === -1L, t)
         }
-    } finally Measure.deleteRecursively(Paths.get(zone))
+    } finally Artifacts.deleteRecursively(Paths.get(zone))
   }
 
   test("decade zone: 10x rows, 10x embedding width, cross-copy dot 0, within-copy cosine bit-identical") {
@@ -57,7 +57,7 @@ class ProbeSpec extends SparkSpec {
         assert(java.lang.Double.doubleToRawLongBits(c) ===
           java.lang.Double.doubleToRawLongBits(base), s"copy $k: $c vs $base")
       }
-    } finally Measure.deleteRecursively(Paths.get(zone))
+    } finally Artifacts.deleteRecursively(Paths.get(zone))
   }
 
   private val json = new ObjectMapper()
