@@ -28,7 +28,9 @@ object Artifacts {
       knobs: Seq[Any])
   private final case class Entry(snapshots: Seq[String], value: Any)
   private val entries = TrieMap.empty[Key, Entry]
-  private val builds = TrieMap.empty[String, AtomicLong]
+  /** Per-kind counts: builds, hits and build nanoseconds. */
+  private final class Stats { val builds, hits, buildNanos = new AtomicLong }
+  private val stats = TrieMap.empty[String, Stats]
 
   /** The artifact `kind` for (`dir`, `knobs`) built from the tables
     * `sources` under `dir`: the memoized value while every source's
@@ -37,18 +39,37 @@ object Artifacts {
       knobs: Any*)(build: => T): T = {
     val key = Key(kind, spark.sparkContext.applicationId, dir, sources, knobs)
     val snapshots = sources.map(snapshotId(spark, dir, _))
+    val st = stats.getOrElseUpdate(kind, new Stats)
     entries.get(key) match {
-      case Some(Entry(s, v)) if s == snapshots => v.asInstanceOf[T]
+      case Some(Entry(s, v)) if s == snapshots =>
+        st.hits.incrementAndGet()
+        v.asInstanceOf[T]
       case _ =>
+        val t0 = System.nanoTime()
         val v = build
-        builds.getOrElseUpdate(kind, new AtomicLong).incrementAndGet()
+        st.buildNanos.addAndGet(System.nanoTime() - t0)
+        st.builds.incrementAndGet()
         entries.put(key, Entry(snapshots, v))
         v
     }
   }
 
   /** How many times `kind` has been built in this JVM. */
-  private[graft] def buildCount(kind: String): Long = builds.get(kind).fold(0L)(_.get)
+  private[graft] def buildCount(kind: String): Long = stats.get(kind).fold(0L)(_.builds.get)
+
+  /** How many lookups of `kind` in this JVM were served from the memo. */
+  private[graft] def hitCount(kind: String): Long = stats.get(kind).fold(0L)(_.hits.get)
+
+  /** Wall seconds spent building `kind` in this JVM, summed over its
+    * builds (a nested artifact's build time is also in its consumer's). */
+  private[graft] def buildSeconds(kind: String): Double =
+    stats.get(kind).fold(0L)(_.buildNanos.get) / 1e9
+
+  /** Drops the `kind` entries for `dir` whose knobs match `stale`: for a
+    * store that deletes what those entries point at, so a later lookup
+    * rebuilds instead of handing out a deleted path. */
+  private[graft] def forget(kind: String, dir: String)(stale: Seq[Any] => Boolean): Unit =
+    entries.keys.foreach(k => if (k.kind == kind && k.dir == dir && stale(k.knobs)) entries.remove(k))
 
   /** Snapshot id of `table` under `dir`: a 128-bit digest of its data
     * files' (path, size, mtime) listing. Listing-only, no data read; a

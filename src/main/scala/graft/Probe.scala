@@ -210,44 +210,53 @@ object Probe {
     * drain still re-explodes the stored fingerprint index into postings
     * for its probe join, so expect a slowly growing curve there; the
     * upsert drain reloads one KPI state row per day, so expect it
-    * near-flat (SCALE.md §streaming). */
+    * near-flat (SCALE.md §streaming). Each timed build drain follows an
+    * untimed one in throwaway dirs: timed cold, the first dir's build
+    * also paid first-use codegen and JIT (a committed scaling.json had
+    * 2.279 s at sf0.001 against 1.298 s at sf0.01), so the curve
+    * understated growth. */
   private[graft] def drainCurves(spark: SparkSession, dir: String): Seq[(String, Option[Double])] = {
     import graft.operators.PipelineQueries
-    def curve(name: String, batch: Int => Unit)(drain: => Unit): Seq[(String, Option[Double])] = {
-      val build = time(s"${name}_build on $dir")(drain)
-      val incr = (1 to 3).map { i => batch(i); time(s"${name}_incr on $dir")(drain) }
-      Seq(s"${name}_build" -> build.median,
-        s"${name}_incr" -> Timing(Nil, incr.flatMap(_.samples), incr.exists(_.failed)).median)
-    }
     def inTempDirs[A](n: Int)(f: Seq[String] => A): A = {
       val ps = Seq.fill(n)(Files.createTempDirectory("graft-drain"))
       try f(ps.map(_.toString)) finally ps.foreach(Artifacts.deleteRecursively)
     }
-    val nearDup = inTempDirs(4) { case Seq(in, out, idx, ck) =>
-      val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
+    /** `setup` lands the build zone in `n` fresh dirs and returns the
+      * batch lander and the drain. */
+    def curve(name: String, n: Int)(
+        setup: Seq[String] => (Int => Unit, () => Unit)): Seq[(String, Option[Double])] = {
+      inTempDirs(n)(ps => setup(ps)._2())
+      inTempDirs(n) { ps =>
+        val (batch, drain) = setup(ps)
+        val build = time(s"${name}_build on $dir")(drain())
+        val incr = (1 to 3).map { i => batch(i); time(s"${name}_incr on $dir")(drain()) }
+        Seq(s"${name}_build" -> build.median,
+          s"${name}_incr" -> Timing(Nil, incr.flatMap(_.samples), incr.exists(_.failed)).median)
+      }
+    }
+    val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    val nearDup = curve("q_stream_neardup", 4) { case Seq(in, out, idx, ck) =>
       def land(df: DataFrame): Unit =
         df.select(to_json(struct(col("doc_id"), col("text"))).as("value"))
           .coalesce(1).write.mode("append").text(in)
       (0 until 3).foreach(k => land(docs.where(pmod(col("doc_id"), lit(3)) === k)))
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      curve("q_stream_neardup", i => land(docs.orderBy(col("doc_id")).limit(32)
-        .select((col("doc_id") + lit(maxId * i + 1)).as("doc_id"), col("text")))) {
-        PipelineQueries.nearDupDrain(spark, in, out, idx, ck)
-      }
+      (i => land(docs.orderBy(col("doc_id")).limit(32)
+        .select((col("doc_id") + lit(maxId * i + 1)).as("doc_id"), col("text"))),
+        () => PipelineQueries.nearDupDrain(spark, in, out, idx, ck))
     }
-    val upsert = inTempDirs(3) { case Seq(in, out, ck) =>
-      // Batch i shifts by (span + 40)·i days, so the batches and the
-      // build zone stay day-disjoint for any corpus span and each
-      // incremental drain overwrites only its own fresh days.
-      val spanDays = Tables.load(spark, dir, "events")
-        .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts")))))
-        .head().getInt(0)
+    // Batch i shifts by (span + 40)·i days, so the batches and the
+    // build zone stay day-disjoint for any corpus span and each
+    // incremental drain overwrites only its own fresh days.
+    val spanDays = Tables.load(spark, dir, "events")
+      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts")))))
+      .head().getInt(0)
+    val upsert = curve("q_stream_upsert", 3) { case Seq(in, out, ck) =>
       PipelineQueries.writeWireZone(spark, dir, in, cutoffDate = Some(PipelineQueries.StreamCutoff))
-      curve("q_stream_upsert", i => PipelineQueries.writeWireZone(spark, dir, in,
+      (i => PipelineQueries.writeWireZone(spark, dir, in,
         cutoffDate = None, files = 1, limit = 500,
-        shiftDays = (spanDays + 40) * i, idPrefix = s"b$i-")) {
-        PipelineQueries.upsertDrain(spark, in, out, ck)
-      }
+        shiftDays = (spanDays + 40) * i, idPrefix = s"b$i-"),
+        () => PipelineQueries.upsertDrain(spark, in, out, ck))
     }
     nearDup ++ upsert
   }

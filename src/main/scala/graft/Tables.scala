@@ -76,12 +76,40 @@ object Tables {
     }
   }
 
+  /** Initializes Spark's `CollationAwareUTF8String` on a daemon thread,
+    * once per JVM. Spark 4.1's `lower()`/`upper()` reach that class,
+    * and its static initializer runs ICU `toTitleCase` over all
+    * 1,114,112 code points to build a title-case table that `lower()`
+    * never reads: ~1.5 s of CPU, paid by the first task that lowercases
+    * while the stage's other tasks wait on the class-init lock. Every
+    * case-insensitive predicate does (`EventPredicates.isPageview` in
+    * the KPI fold among them), so a fresh JVM's first KPI scan paid it
+    * on its critical path. [[session]] starts this first, so the table
+    * is built on an idle core during the 6–8 s session build. A job
+    * that never lowercases (`FreshnessMain`) pays that CPU for nothing.
+    * The initializer touches only JDK and ICU classes, so it cannot
+    * deadlock against the builder's class loading; results are
+    * unchanged because the same Spark code runs. The static call (not
+    * a class name string) makes a Spark upgrade that moves the class
+    * fail the build. */
+  private[graft] lazy val caseTableWarmup: Thread = {
+    val t = new Thread(() => {
+      org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
+        .toLowerCase(org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8)
+      ()
+    }, "graft-case-table-warmup")
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
   /** Builds the standard SparkSession used by mains. local[32] mirrors a
     * 32-slot executor; shuffle partitions match cores (not default 200)
     * so small-SF runs don't pay 200 empty-task overheads while the same
     * code scales by config on a real cluster.
     */
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
+    caseTableWarmup
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(master)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -227,14 +229,15 @@ object DupClusters {
     * where <snapshot> fingerprints the documents table's file listing
     * (name, size, mtime). A corpus change ⇒ a new snapshot id ⇒ a new
     * path, so invalidation is structural (the stale manifest is never
-    * read, old snapshots are retention-GC'd); within a snapshot the
-    * build runs at most once per path — racing writers build into a
-    * private temp dir and promote with one atomic rename, losers
-    * discard. The pair detector (q_ngram_jaccard) and the clustering
-    * algorithm (q_dup_clusters) still run live under their own gates;
-    * the manifests exist for the CONSUMERS (canonicalization, radius,
-    * triangle audit), which now plan a bounded parquet scan of the
-    * manifest — the corpus never re-enters their plans
+    * read, and each promote deletes the corpus's other snapshots);
+    * within a snapshot the build runs at most once per path — racing
+    * writers build into a private temp dir and promote with one atomic
+    * rename, losers discard. The pair detector (q_ngram_jaccard) and
+    * the clustering algorithm (q_dup_clusters) still run live under
+    * their own gates; the manifests exist for the CONSUMERS
+    * (canonicalization, radius, triangle audit), which now plan a
+    * bounded parquet scan of the manifest — the corpus never re-enters
+    * their plans
     * (spec-pinned in DupClustersSpec, with build-once and
     * invalidate-on-version-change pinned via [[manifestBuilds]]). */
   private[graft] val manifestBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -274,9 +277,11 @@ object DupClusters {
   /** Read-through table: serve `<base>/…/<name>` if its _SUCCESS
     * exists, else build → temp dir → atomic rename (idempotent under
     * concurrent builders; the path names the snapshot, so the memo only
-    * skips the filesystem probe on repeat calls). Returns a plain
-    * parquet scan with an explicit schema — no footer job, no driver
-    * copy. */
+    * skips the filesystem probe on repeat calls). A promote then
+    * deletes the corpus's other snapshot dirs and forgets their memo
+    * entries; a DataFrame still holding an older snapshot's scan fails
+    * on its next action. Returns a plain parquet scan with an explicit
+    * schema — no footer job, no driver copy. */
   private[graft] def manifestTable(
       spark: SparkSession, base: String, corpusDir: String, version: String,
       name: String, schema: org.apache.spark.sql.types.StructType,
@@ -298,6 +303,12 @@ object DupClusters {
           // another writer promoted first — keep theirs, drop ours
           graft.Artifacts.deleteRecursively(tmp)
         }
+        val snapshot = path.getParent
+        val ls = Files.list(snapshot.getParent)
+        val stale = try ls.iterator().asScala.filter(_ != snapshot).toList finally ls.close()
+        stale.foreach(graft.Artifacts.deleteRecursively)
+        graft.Artifacts.forget("manifest", corpusDir)(
+          knobs => stale.exists(d => Paths.get(knobs.head.toString).startsWith(d)))
       }
     })
     spark.read.schema(schema).parquet(path.toString)

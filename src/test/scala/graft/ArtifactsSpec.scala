@@ -47,8 +47,9 @@ class ArtifactsSpec extends SparkSpec {
   private def dropThird(key: String): DataFrame => DataFrame =
     _.where(pmod(col(key), lit(3)) =!= 0)
 
+  /** `lookups`: how often one run of `query` asks the memo for `kind`. */
   private case class Case(kind: String, table: String, change: DataFrame => DataFrame,
-      query: (SparkSession, String) => Seq[String])
+      query: (SparkSession, String) => Seq[String], lookups: Int = 1)
 
   private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => Seq[String] =
     (s, d) => rows(f(s, d))
@@ -78,7 +79,8 @@ class ArtifactsSpec extends SparkSpec {
     Case("hot-keys", "lineitem",
       li => li.unionByName(li.limit(1).crossJoin(spark.range(3000)).drop("id")),
       (s, d) => PipelineQueries.hotKeys(s, d).map(_.toString).toSeq),
-    Case("exact-cos-pairs", "embeddings", embeddings, q(VectorQueries.cosineDedupLsh)),
+    // the recall/precision check and the emitted pairs each read it
+    Case("exact-cos-pairs", "embeddings", embeddings, q(VectorQueries.cosineDedupLsh), lookups = 2),
     Case("vec-member-map", "embeddings", embeddings,
       q((s, d) => VectorQueries.memberMapFor(s, d)._1.select("vec_id", "rep_id"))),
     Case("sem-index", "embeddings", embeddings,
@@ -94,7 +96,7 @@ class ArtifactsSpec extends SparkSpec {
     Case("bpe", "documents", documents, q((s, d) => TextQueries.bpeEncode(s, d))),
     Case("substr-fp-index", "documents", documents,
       q((s, d) => TextQueries.dupSubstringsIncremental(s, d))),
-    Case("exact-half-pairs", "documents", documents, q(TextQueries.minhashDedup)),
+    Case("exact-half-pairs", "documents", documents, q(TextQueries.minhashDedup), lookups = 2),
     Case("shingle-df", "documents", documents, q(TextQueries.shingleDf)),
     Case("minhash-member-map", "documents", documents,
       q((s, d) => TextQueries.minhashMemberMap(s, d)._1.select("doc_id", "rep_id"))),
@@ -102,12 +104,20 @@ class ArtifactsSpec extends SparkSpec {
       (s, d) => TextQueries.exactSourceGrid(s, d).map(_.toString).toSeq.sorted),
     Case("manifest", "documents", documents, q(DupClusters.canonicalReps)))
 
+  /** Runs `body` with the near-dup manifest store in a fresh temp dir. */
+  private def withManifestDir[A](body: Path => A): A = {
+    val manifests = Artifacts.tempDir("graft-memo-spec-manifests")
+    val prev = sys.props.get("graft.manifest.dir")
+    sys.props("graft.manifest.dir") = manifests.toString
+    try body(manifests) finally prev match {
+      case Some(v) => sys.props("graft.manifest.dir") = v
+      case None => sys.props.remove("graft.manifest.dir")
+    }
+  }
+
   for (c <- cases)
     test(s"${c.kind} follows an in-place rewrite of ${c.table}") {
-      val manifests = Artifacts.tempDir("graft-memo-spec-manifests")
-      val prev = sys.props.get("graft.manifest.dir")
-      sys.props("graft.manifest.dir") = manifests.toString
-      try {
+      withManifestDir { _ =>
         val dir = copyOf(sf)
         val before = c.query(spark, dir)
         val built = Artifacts.buildCount(c.kind)
@@ -119,11 +129,13 @@ class ArtifactsSpec extends SparkSpec {
         assert(after !== before, "the rewrite must change the query's result")
         assert(after === c.query(spark, copyOf(dir)))
         val reused = Artifacts.buildCount(c.kind)
+        val hits = Artifacts.hitCount(c.kind)
+        val secs = Artifacts.buildSeconds(c.kind)
+        assert(secs > 0, s"${c.kind} builds took no recorded time")
         assert(c.query(spark, dir) === after)
         assert(Artifacts.buildCount(c.kind) === reused, s"${c.kind} rebuilt with no change")
-      } finally prev match {
-        case Some(v) => sys.props("graft.manifest.dir") = v
-        case None => sys.props.remove("graft.manifest.dir")
+        assert(Artifacts.hitCount(c.kind) === hits + c.lookups, s"${c.kind} reuse was not counted as a hit")
+        assert(Artifacts.buildSeconds(c.kind) === secs, s"${c.kind} reuse added build time")
       }
     }
 
@@ -140,6 +152,33 @@ class ArtifactsSpec extends SparkSpec {
     assert(builds === 3, "a change to another table rebuilt an entry")
     assert(of("lineitem", 1) === "lineitem1")
     assert(builds === 4)
+  }
+
+  test("a documents rewrite deletes the near-dup manifests of older snapshots") {
+    withManifestDir { base =>
+      val dir = copyOf(sf)
+      def snapshots: Seq[String] = {
+        val s = Files.walk(base)
+        try s.iterator().asScala.toSeq.filter(_.getFileName.toString == "labels")
+          .map(_.getParent.getFileName.toString).sorted
+        finally s.close()
+      }
+      rows(DupClusters.canonicalReps(spark, dir))
+      assert(snapshots === Seq(DupClusters.corpusVersion(dir)))
+      rewrite(dir, "documents")(documents)
+      rows(DupClusters.canonicalReps(spark, dir))
+      rewrite(dir, "documents")(_.where(pmod(col("doc_id"), lit(5)) =!= 0))
+      val third = rows(DupClusters.canonicalReps(spark, dir))
+      assert(snapshots === Seq(DupClusters.corpusVersion(dir)), "older snapshots were left behind")
+      assert(third === rows(DupClusters.canonicalReps(spark, copyOf(dir))))
+      // a snapshot whose directory was deleted is rebuilt, not read from a memo
+      val builds = DupClusters.manifestBuilds.get()
+      DupClusters.pairManifestAt(spark, base.toString, dir, "other").count()
+      assert(DupClusters.manifestBuilds.get() === builds + 1)
+      DupClusters.pairManifestAt(spark, base.toString, dir, DupClusters.corpusVersion(dir)).count()
+      assert(DupClusters.manifestBuilds.get() === builds + 2,
+        "a deleted snapshot was served from the memo")
+    }
   }
 
   test("no memo outside the registry: TrieMap appears in no other main source") {
