@@ -82,11 +82,12 @@ object Tables {
     * 1,114,112 code points to build a title-case table that `lower()`
     * never reads: ~1.5 s of CPU, paid by the first task that lowercases
     * while the stage's other tasks wait on the class-init lock. Every
-    * case-insensitive predicate does (`EventPredicates.isPageview` in
-    * the KPI fold among them), so a fresh JVM's first KPI scan paid it
-    * on its critical path. [[session]] starts this first, so the table
-    * is built on an idle core during the 6–8 s session build. A job
-    * that never lowercases (`FreshnessMain`) pays that CPU for nothing.
+    * case-insensitive predicate does (`Kpis.isPageview` in the KPI
+    * fold among them), so a fresh JVM's first KPI scan paid it on its
+    * critical path. [[session]] starts this first, so the table is
+    * built on an idle core during the 6–8 s session build. A job that
+    * never lowercases would pay that CPU for nothing, so
+    * `FreshnessMain` builds no session.
     * The initializer touches only JDK and ICU classes, so it cannot
     * deadlock against the builder's class loading; results are
     * unchanged because the same Spark code runs. The static call (not

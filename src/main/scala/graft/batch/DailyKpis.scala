@@ -2,7 +2,7 @@ package graft.batch
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.EventSchema
+import graft.model.{EventSchema, Kpis}
 
 /** Reference-parity daily KPI job over raw JSONL
   * (reference: airflow/dags/daily_kpis.py — partition-pruned scan →
@@ -17,12 +17,8 @@ import graft.model.EventSchema
   *  - malformed JSON lines are dropped via PERMISSIVE mode +
   *    corrupt-record filter — count-identical to the reference's
   *    `except: continue` (daily_kpis.py:104-107);
-  *  - revenue rounding uses F.roundBin (round-half-up on the binary
-  *    double, matching DuckDB/SQL `round()`), a documented deviation
-  *    from Python's `round` (daily_kpis.py:139, HALF_EVEN on the
-  *    shortest decimal repr) — bround here would diverge from the
-  *    q_raw_kpis oracle on sums whose shortest repr shows x.xx5 while
-  *    the binary value sits below the half.
+  *  - the fold, its revenue rounding and the event-time parse are
+  *    [[graft.model.Kpis]]'s, shared with every other KPI query.
   */
 object DailyKpis {
 
@@ -33,8 +29,6 @@ object DailyKpis {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", EventSchema.CorruptCol)
       .json(rawPath)
-
-  import graft.model.EventPredicates.{isPageview, isPurchase}
 
   /** All-days KPI table: one row per event-date present in the input.
     * `day = Some(d)` reproduces the reference's single-day run: when
@@ -60,31 +54,25 @@ object DailyKpis {
       // PERMISSIVE mode yields all-null rows w/ corrupt sidecar for those
       .where(col(EventSchema.CorruptCol).isNull)
       .drop(EventSchema.CorruptCol)
-      .withColumn("ts", try_to_timestamp(col("event_ts")))
+      .withColumn("ts", Kpis.eventTime)
     val pruned = day.fold(raw) { d =>
       if (partitioned) raw.where(col("date") === lit(d))
       else raw.where(to_date(col("ts")) === lit(d))
     }
-    if (partitioned) aggregateEvents(pruned, col("date").cast("string"))
+    if (partitioned) aggregateEvents(pruned, col("date").cast("string").as("dt"))
     else aggregateEvents(pruned)
   }
 
   /** The KPI fold itself (daily_kpis.py:109-140) over any DataFrame
-    * with (user_id, session_id, event_type, price), one row per `dt`;
-    * `dt` defaults to the date of a `ts` column. Exposed so properties
-    * of the fold are testable on arbitrary inputs. */
-  def aggregateEvents(events: DataFrame,
-                      dt: Column = date_format(col("ts"), "yyyy-MM-dd")): DataFrame =
+    * with (user_id, session_id, event_type, price), one row per key
+    * `dt`, a column named `dt` that defaults to the date of a `ts`
+    * column. Exposed so properties of the fold are testable on
+    * arbitrary inputs. */
+  def aggregateEvents(events: DataFrame, dt: Column = Kpis.dt): DataFrame =
     events
-      .groupBy(dt.as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        countDistinct(col("user_id")).as("unique_users"),
-        countDistinct(col("session_id")).as("unique_sessions"),
-        sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"),
-        graft.functions.F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("price"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .groupBy(dt)
+      .agg(Kpis.totalEvents, Kpis.uniqueUsers, Kpis.uniqueSessions,
+        Kpis.pageviews, Kpis.purchases, Kpis.revenue(col("price")))
       .orderBy(col("dt"))
 
   /** KPI sink (reference: daily_kpis.py:165-172 — snappy parquet under

@@ -1,5 +1,7 @@
 package graft.jobs
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import graft.batch.DailyKpis
 import graft.quality.Freshness
@@ -40,6 +42,17 @@ object JobArgs {
       logical = sys.env.get("GRAFT_LOGICAL_DATE")).toString
 
   def session(): SparkSession = graft.Tables.session()
+
+  /** The Hadoop conf of a [[session]], built without one: every
+    * `spark.hadoop.*` entry of the Spark conf (`spark-submit --conf`,
+    * `-Dspark.hadoop.*`) with its prefix stripped, then the `file:`
+    * layer [[graft.sources.LocalFs]] installs. */
+  def hadoopConf(): Configuration = {
+    val conf = new Configuration()
+    new SparkConf().getAllWithPrefix("spark.hadoop.").foreach { case (k, v) => conf.set(k, v) }
+    graft.sources.LocalFs.settings.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
 }
 
 /** `spark-submit --class graft.jobs.DailyKpisMain <jar> <rawDir> <outDir>
@@ -97,18 +110,16 @@ object IngestMain {
   *
   * Exits 0 iff a raw object under `<rawDir>/date=<day>/` was modified
   * within the lookback window; throws (non-zero exit) otherwise —
-  * the reference healthcheck's raise-on-stale contract.
+  * the reference healthcheck's raise-on-stale contract. A listing
+  * needs no `SparkSession`, so none is started.
   */
 object FreshnessMain {
   def main(args: Array[String]): Unit = {
     val (pos, flags) = JobArgs.parse(args)
     require(pos.length == 1, "usage: FreshnessMain <rawDir> [--date d] [--lookback-min 20]")
-    val spark = JobArgs.session()
-    try {
-      val day = JobArgs.runDate(flags)
-      val lookback = flags.get("lookback-min").map(_.toInt).getOrElse(20)
-      Freshness.check(spark, pos(0), day, lookback)
-      println(s"FRESH $day")
-    } finally spark.stop()
+    val day = JobArgs.runDate(flags)
+    val lookback = flags.get("lookback-min").map(_.toInt).getOrElse(20)
+    Freshness.check(JobArgs.hadoopConf(), pos(0), day, lookback)
+    println(s"FRESH $day")
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
   * reads defensively with nulls tolerated
   * (reference: airflow/dags/daily_kpis.py:117-129).
   *
-  * `event_ts` stays a string here — parse with `to_timestamp` at use
-  * sites so the missing/garbled-timestamp fallback
+  * `event_ts` stays a string here — parse with [[Kpis.eventTime]] at
+  * use sites so the missing/garbled-timestamp fallback
   * (reference: airflow/dags/ingest_clickstream_to_s3.py:44-51) is
   * expressible as `coalesce`.
   */
@@ -35,15 +35,4 @@ object EventSchema {
     * bad lines countable. */
   val schemaWithCorrupt: StructType =
     schema.add(StructField(CorruptCol, StringType))
-
-  /** KPI output schema (reference: airflow/dags/daily_kpis.py:133-140). */
-  val kpiSchema: StructType = StructType(Seq(
-    StructField("total_events", LongType, nullable = false),
-    StructField("unique_users", LongType, nullable = false),
-    StructField("unique_sessions", LongType, nullable = false),
-    StructField("pageviews", LongType, nullable = false),
-    StructField("purchases", LongType, nullable = false),
-    StructField("revenue_usd", DoubleType, nullable = false),
-    StructField("dt", StringType, nullable = false),
-  ))
 }

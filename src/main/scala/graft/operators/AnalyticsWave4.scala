@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
-import graft.model.EventPredicates.isPurchase
+import graft.model.Kpis
 
 /** Fourth-wave analytics operators (r8): the batch MERGE-INTO upsert
   * (the warehouse mutation primitive next to the streaming upsert and
@@ -44,12 +44,7 @@ object AnalyticsWave4 {
     * StreamSketchSpec's two-drain test). */
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     def kpis(df: DataFrame): DataFrame =
-      df.groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(
-          count(lit(1)).as("total_events"),
-          count_distinct(col("user_id")).as("unique_users"),
-          F.roundBin(sum(when(isPurchase(col("event_type")),
-            coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      df.groupBy(Kpis.dt).agg(Kpis.totalEvents, Kpis.uniqueUsers, Kpis.revenue(col("value")))
     val ev = load(spark, dir, "events")
     val target = kpis(ev
         .where(to_date(col("ts")) < lit(MergeCutoff))
@@ -106,9 +101,8 @@ object AnalyticsWave4 {
     * day-grain KPI aggregation underneath. */
   def rollingMedian(spark: SparkSession, dir: String): DataFrame = {
     val daily = load(spark, dir, "events")
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(F.roundBin(sum(when(isPurchase(col("event_type")),
-        coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("rev"))
+      .groupBy(Kpis.dt)
+      .agg(Kpis.revenue(col("value")).as("rev"))
     val w = Window.orderBy(col("dt")).rowsBetween(-6, 0)
     daily.select(col("dt"), col("rev"),
         F.roundBin(expr("percentile(rev, 0.5D)").over(w), 2).as("rev_med7"),

@@ -70,16 +70,12 @@ object BloomScan {
     * a pushed filter and is tested against each row group's bloom
     * before decode. */
   def bloomScan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.model.EventPredicates.isPurchase
+    import graft.model.Kpis
     spark.read.parquet(ensureBloomLayout(spark, dir))
       .where(col("user_id").isin(ProbeUsers: _*))
       .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("n_purchases"),
-        graft.functions.F.roundBin(
-          sum(when(isPurchase(col("event_type")), coalesce(col("value"), lit(0.0)))
-            .otherwise(0.0)), 2).as("revenue_usd"))
+      .agg(Kpis.totalEvents.as("n_events"), Kpis.purchases.as("n_purchases"),
+        Kpis.revenue(col("value")))
       .orderBy(col("user_id"))
   }
 }

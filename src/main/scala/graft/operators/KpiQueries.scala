@@ -26,7 +26,7 @@ import graft.functions.F
 object KpiQueries {
   import graft.Tables.load
 
-  import graft.model.EventPredicates.{isPageview, isPurchase}
+  import graft.model.Kpis
 
   /** Daily KPI rollup — the reference's flagship computation
     * (daily_kpis.py:142-172), generalized from one-day-per-run to
@@ -35,14 +35,9 @@ object KpiQueries {
     */
   def kpiDaily(spark: SparkSession, dir: String): DataFrame = {
     val ev = load(spark, dir, "events")
-    ev.groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        countDistinct(col("user_id")).as("unique_users"),
-        sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"),
-        F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+    ev.groupBy(Kpis.dt)
+      .agg(Kpis.totalEvents, Kpis.uniqueUsers, Kpis.pageviews, Kpis.purchases,
+        Kpis.revenue(col("value")))
       .orderBy(col("dt"))
   }
 
@@ -50,14 +45,9 @@ object KpiQueries {
     * per day (daily_kpis.py:133-140). */
   def kpiTotal(spark: SparkSession, dir: String): DataFrame = {
     val ev = load(spark, dir, "events")
-    ev.agg(
-      count(lit(1)).as("total_events"),
-      countDistinct(col("user_id")).as("unique_users"),
+    ev.agg(Kpis.totalEvents, Kpis.uniqueUsers,
       countDistinct(col("event_type")).as("unique_event_types"),
-      sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-      sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"),
-      F.roundBin(sum(when(isPurchase(col("event_type")),
-        coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      Kpis.pageviews, Kpis.purchases, Kpis.revenue(col("value")))
   }
 
   /** Projection / scalar-expression parity row query: null-safe lower
@@ -176,7 +166,7 @@ object KpiQueries {
   def sessionWindow(spark: SparkSession, dir: String): DataFrame = {
     // second-truncated TIMESTAMP passed straight through — an earlier
     // revision formatted to an ISO string and re-parsed it inside
-    // StreamingKpis.sessions (to_timestamp on a timestamp is a no-op),
+    // StreamingKpis.sessions (try_to_timestamp on a timestamp is a no-op),
     // paying a format+parse round-trip over every row
     val ev = load(spark, dir, "events")
       .select(col("user_id"),
@@ -251,11 +241,8 @@ object KpiQueries {
     * KPI aggregation itself. */
   def unpivotKpis(spark: SparkSession, dir: String): DataFrame = {
     val kpis = load(spark, dir, "events")
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"))
+      .groupBy(Kpis.dt)
+      .agg(Kpis.totalEvents, Kpis.pageviews, Kpis.purchases)
     kpis.unpivot(
         Array(col("dt")),
         Array(col("total_events"), col("pageviews"), col("purchases")),
@@ -422,7 +409,7 @@ object KpiQueries {
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
     val anchor = lit("2024-01-31").cast("date")
     val per = load(spark, dir, "events")
-      .where(isPurchase(col("event_type")))
+      .where(Kpis.isPurchase(col("event_type")))
       .groupBy(col("user_id"))
       .agg(
         datediff(anchor, max(to_date(col("ts")))).as("recency_days"),
@@ -538,9 +525,7 @@ object KpiQueries {
     val hourly = load(spark, dir, "events")
       .where(col("ts") < lit("2024-01-06").cast("timestamp"))
       .groupBy(date_format(col("ts"), "yyyy-MM-dd HH:00").as("hour"))
-      .agg(count(lit(1)).as("n_events"),
-        F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("rev"))
+      .agg(Kpis.totalEvents.as("n_events"), Kpis.revenue(col("value")).as("rev"))
     grid.join(broadcast(hourly), Seq("hour"), "left_outer")
       .select(col("hour"),
         coalesce(col("n_events"), lit(0L)).as("n_events"),

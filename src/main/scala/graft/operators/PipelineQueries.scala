@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Artifacts.tempDir
 import graft.batch.DailyKpis
+import graft.model.Kpis
 import graft.streaming.RawIngest
 
 /** Oracle-checkable end-to-end pipeline runs (SURVEY.md §3): the
@@ -91,13 +92,8 @@ object PipelineQueries {
   /** EP3 batch KPI job over JSONL raw — schema-on-read, PERMISSIVE
     * corrupt-record drop, group-by-day aggregation (A1–A6 on the real
     * raw-zone codepath rather than the parquet fixture). */
-  def rawKpis(spark: SparkSession, dir: String): DataFrame = {
-    val raw = writeJsonl(spark, dir, "graft-rawkpi")
-    DailyKpis.compute(spark, raw)
-      .select(col("dt"), col("total_events"), col("unique_users"),
-        col("unique_sessions"), col("pageviews"), col("purchases"),
-        col("revenue_usd"))
-  }
+  def rawKpis(spark: SparkSession, dir: String): DataFrame =
+    DailyKpis.compute(spark, writeJsonl(spark, dir, "graft-rawkpi"))
 
   /** The single day prunedKpis answers for (within the StreamCutoff
     * zone; interpolated into the oracle SQL too). */
@@ -147,9 +143,6 @@ object PipelineQueries {
     val out = tempDir("graft-compact-out")
     graft.batch.Compaction.compactZone(spark, frag, out.toString)
     DailyKpis.compute(spark, out.toString)
-      .select(col("dt"), col("total_events"), col("unique_users"),
-        col("unique_sessions"), col("pageviews"), col("purchases"),
-        col("revenue_usd"))
   }
 
   /** S6 Hive-layout partition-pruned scan under the oracle gate
@@ -158,13 +151,8 @@ object PipelineQueries {
     * filter must land on the `date` partition column (PlanSpec asserts
     * non-empty PartitionFilters) and the one-day KPI row must match
     * direct SQL over the fixture. */
-  def prunedKpis(spark: SparkSession, dir: String): DataFrame = {
-    val zone = writePartitionedZone(spark, dir)
-    DailyKpis.compute(spark, zone, day = Some(PruneDay))
-      .select(col("dt"), col("total_events"), col("unique_users"),
-        col("unique_sessions"), col("pageviews"), col("purchases"),
-        col("revenue_usd"))
-  }
+  def prunedKpis(spark: SparkSession, dir: String): DataFrame =
+    DailyKpis.compute(spark, writePartitionedZone(spark, dir), day = Some(PruneDay))
 
   /** S6 sibling — DYNAMIC partition pruning: unlike prunedKpis'
     * static literal, here the pruning predicate is only derivable at
@@ -743,7 +731,6 @@ object PipelineQueries {
     * curve. Returns the number of foreachBatch upserts. */
   private[graft] def upsertDrain(spark: SparkSession, in: String,
       out: String, ck: String): Long = {
-    import graft.model.EventPredicates.{isPageview, isPurchase}
     val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
     val wire = spark.readStream.schema(graft.model.EventSchema.schema)
       .option("maxFilesPerTrigger", 1) // 4 zone files ⇒ ≥4 upsert batches
@@ -751,12 +738,7 @@ object PipelineQueries {
     val kpis = wire.where(col("event_ts").isNotNull)
       .withColumn("dt", substring(col("event_ts"), 1, 10))
       .groupBy(col("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"),
-        graft.functions.F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("price"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .agg(Kpis.totalEvents, Kpis.pageviews, Kpis.purchases, Kpis.revenue(col("price")))
     withShufflePartitions(spark, 8) {
       val q = kpis.writeStream.outputMode("update")
         .option("checkpointLocation", ck)

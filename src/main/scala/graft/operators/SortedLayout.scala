@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.F
-import graft.model.EventPredicates.isPurchase
+import graft.model.Kpis
 
 /** Sort-clustered layout + zone-map data skipping (SURVEY.md §2
   * S-family scale extension, the scan-side sibling of
@@ -148,12 +147,8 @@ object SortedLayout {
     spark.read.parquet(files.toIndexedSeq: _*)
       .where(col("ts") >= lit(lo).cast("timestamp") &&
         col("ts") < lit(hi).cast("timestamp"))
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        countDistinct(col("user_id")).as("unique_users"),
-        F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .groupBy(Kpis.dt)
+      .agg(Kpis.totalEvents, Kpis.uniqueUsers, Kpis.revenue(col("value")))
       .orderBy(col("dt"))
   }
 
@@ -166,11 +161,7 @@ object SortedLayout {
     sortedEvents(spark, dir)
       .where(col("ts") >= lit("2024-01-10").cast("timestamp") &&
         col("ts") < lit("2024-01-13").cast("timestamp"))
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        countDistinct(col("user_id")).as("unique_users"),
-        F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .groupBy(Kpis.dt)
+      .agg(Kpis.totalEvents, Kpis.uniqueUsers, Kpis.revenue(col("value")))
       .orderBy(col("dt"))
 }

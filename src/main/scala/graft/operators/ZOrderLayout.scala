@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{F, ZOrderKey}
-import graft.model.EventPredicates.isPurchase
+import graft.functions.ZOrderKey
+import graft.model.Kpis
 
 /** Z-order (Morton) clustered layout — the 2-D generalization of
   * [[SortedLayout]] (SURVEY.md §2 S10). A ts-sorted layout prunes
@@ -75,10 +75,7 @@ object ZOrderLayout {
       .where(col("user_id") < 3 &&
         col("ts") >= lit("2024-01-10").cast("timestamp") &&
         col("ts") < lit("2024-01-13").cast("timestamp"))
-      .groupBy(col("user_id"), date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        F.roundBin(sum(when(isPurchase(col("event_type")),
-          coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .groupBy(col("user_id"), Kpis.dt)
+      .agg(Kpis.totalEvents, Kpis.revenue(col("value")))
       .orderBy(col("user_id"), col("dt"))
 }

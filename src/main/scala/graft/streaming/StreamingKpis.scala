@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.model.Kpis
 
 /** Streaming KPI aggregation — the KPI-as-stream upgrade path the
   * reference computes as a daily batch (SURVEY.md §2.9 ST3/ST6):
@@ -13,10 +14,14 @@ import org.apache.spark.sql.functions._
   * unbounded stream cannot bound state (reference keeps an in-memory
   * set per day — daily_kpis.py:111 — which cannot scale past one
   * node).
+  *
+  * The counts, the revenue rounding and the `event_ts` parse are
+  * [[graft.model.Kpis]]'s, as in the batch job: a window's revenue is
+  * what `DailyKpis` reports for the same rows, and a line whose
+  * `event_ts` does not parse has no event time, so it counts in no
+  * window instead of failing the query.
   */
 object StreamingKpis {
-
-  import graft.model.EventPredicates.{isPageview, isPurchase}
 
   /** Tumbling event-time window KPIs with allowed lateness
     * (ST3/ST6). Input: any DataFrame (stream or batch) with the event
@@ -26,16 +31,11 @@ object StreamingKpis {
   def windowed(events: DataFrame, window: String = "1 hour",
                lateness: String = "30 minutes"): DataFrame =
     events
-      .withColumn("ts", to_timestamp(col("event_ts")))
+      .withColumn("ts", Kpis.eventTime)
       .withWatermark("ts", lateness)
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window).as("w"))
-      .agg(
-        count(lit(1)).as("total_events"),
-        approx_count_distinct(col("user_id")).as("approx_users"),
-        sum(when(isPageview(col("event_type")), 1L).otherwise(0L)).as("pageviews"),
-        sum(when(isPurchase(col("event_type")), 1L).otherwise(0L)).as("purchases"),
-        bround(sum(when(isPurchase(col("event_type")),
-          coalesce(col("price"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
+      .agg(Kpis.totalEvents, approx_count_distinct(col("user_id")).as("approx_users"),
+        Kpis.pageviews, Kpis.purchases, Kpis.revenue(col("price")))
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("total_events"), col("approx_users"), col("pageviews"),
         col("purchases"), col("revenue_usd"))
@@ -46,10 +46,10 @@ object StreamingKpis {
   def sessions(events: DataFrame, gap: String = "30 minutes",
                lateness: String = "30 minutes"): DataFrame =
     events
-      .withColumn("ts", to_timestamp(col("event_ts")))
+      .withColumn("ts", Kpis.eventTime)
       .withWatermark("ts", lateness)
       .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
+      .agg(Kpis.totalEvents.as("n_events"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"))
 }

@@ -35,7 +35,7 @@ class BloomScanSpec extends SparkSpec {
   }
 
   test("bloomScan equals the same rollup over the raw fixture") {
-    import graft.model.EventPredicates.isPurchase
+    import graft.model.Kpis.isPurchase
     val expected = Tables.load(spark, sf, "events")
       .where(col("user_id").isin(BloomScan.ProbeUsers: _*))
       .groupBy(col("user_id"))

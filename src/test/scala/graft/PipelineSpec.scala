@@ -173,4 +173,39 @@ class PipelineSpec extends SparkSpec {
     val sess = StreamingKpis.sessions(events, "30 minutes").collect()
     assert(sess.map(_.getAs[Long]("n_events")).sum === 2000L)
   }
+
+  private def lines(ls: String*) = {
+    import spark.implicits._
+    spark.read.schema(graft.model.EventSchema.schema).json(ls.toDS())
+  }
+
+  private def line(ts: String, user: String, eventType: String, price: String): String =
+    s"""{"event_ts":"$ts","user_id":"$user","session_id":"s_$user",""" +
+      s""""event_type":"$eventType","price":$price}"""
+
+  test("streaming windowed revenue rounds as the batch KPI job does") {
+    // 0.125 is exact in binary: half-up gives 0.13, HALF_EVEN (bround) 0.12
+    val ev = lines(line("2024-03-01T10:05:00Z", "u_1", "purchase", "0.125"))
+    val win = StreamingKpis.windowed(ev).collect()
+    val day = DailyKpis.aggregateEvents(ev.withColumn("ts", graft.model.Kpis.eventTime)).collect()
+    assert(day.map(_.getAs[Double]("revenue_usd")).toSeq === Seq(0.13))
+    assert(win.map(_.getAs[Double]("revenue_usd")).toSeq === Seq(0.13))
+  }
+
+  private def withGarbledTs = lines(
+    line("2024-03-01T10:00:00Z", "u_1", "page_view", "null"),
+    line("2024-03-01T10:05:00Z", "u_1", "purchase", "5.0"),
+    line("yesterday", "u_2", "page_view", "null"))
+
+  test("windowed: an unparseable event_ts does not fail the query and counts in no window") {
+    val win = StreamingKpis.windowed(withGarbledTs).collect()
+    assert(win.map(r => (Option(r.getAs[java.sql.Timestamp]("window_start")).map(_.toInstant.toString),
+      r.getAs[Long]("total_events"))).toSeq === Seq((Some("2024-03-01T10:00:00Z"), 2L)))
+  }
+
+  test("sessions: an unparseable event_ts does not fail the query and counts in no session") {
+    val sess = StreamingKpis.sessions(withGarbledTs).collect()
+    assert(sess.map(r => (r.getAs[String]("user_id"), r.getAs[Long]("n_events"))).toSeq ===
+      Seq(("u_1", 2L)))
+  }
 }

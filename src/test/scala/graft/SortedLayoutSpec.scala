@@ -24,7 +24,7 @@ class SortedLayoutSpec extends SparkSpec {
       .agg(count(lit(1)).as("total_events"),
         countDistinct(col("user_id")).as("unique_users"),
         graft.functions.F.roundBin(sum(when(
-          graft.model.EventPredicates.isPurchase(col("event_type")),
+          graft.model.Kpis.isPurchase(col("event_type")),
           coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
       .orderBy(col("dt")).collect().map(_.toSeq)
     assert(got.nonEmpty)

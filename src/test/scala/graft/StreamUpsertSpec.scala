@@ -12,7 +12,7 @@ import graft.operators.PipelineQueries
 class StreamUpsertSpec extends SparkSpec {
 
   test("upserted KPI table equals the direct batch computation") {
-    import graft.model.EventPredicates.{isPageview, isPurchase}
+    import graft.model.Kpis.{isPageview, isPurchase}
     val got = PipelineQueries.streamUpsertKpis(spark, sf).collect().map(_.toSeq)
     val exp = Tables.load(spark, sf, "events")
       .where(to_date(col("ts")) < lit(PipelineQueries.StreamCutoff))

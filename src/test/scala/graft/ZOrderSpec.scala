@@ -57,7 +57,7 @@ class ZOrderSpec extends SparkSpec {
       .groupBy(col("user_id"), date_format(col("ts"), "yyyy-MM-dd").as("dt"))
       .agg(count(lit(1)).as("total_events"),
         graft.functions.F.roundBin(sum(when(
-          graft.model.EventPredicates.isPurchase(col("event_type")),
+          graft.model.Kpis.isPurchase(col("event_type")),
           coalesce(col("value"), lit(0.0))).otherwise(0.0)), 2).as("revenue_usd"))
       .orderBy(col("user_id"), col("dt")).collect().map(_.toSeq)
     assert(got.nonEmpty)
