@@ -43,8 +43,10 @@ object Tables {
   /** Register every fixture table as a temp view so users can drive
     * the engine with raw `spark.sql(...)` text — the catalog-style
     * entry point (graft functions are already SQL-registered via
-    * [[graft.functions.GraftFunctions.install]], so e.g.
-    * `SELECT hll_estimate(hll_union(sk)) FROM sketches` parses too).
+    * [[graft.functions.GraftFunctions.install]] beside Spark's
+    * built-ins, so e.g.
+    * `SELECT hll_sketch_estimate(hll_union_agg(sk)) FROM sketches`
+    * parses too).
     * Views resolve through [[load]], so schema memoization and the
     * events-ts normalization apply identically to SQL users. */
   def registerViews(spark: SparkSession, sfDir: String): Unit =

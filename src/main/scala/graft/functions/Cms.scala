@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ⌈ln 1/δ⌉. Cell-wise ADDITION merges sketches exactly (the
   * mergeable-summaries contract), so partial aggregation and
   * sketch-table rollups compose — the frequency counterpart to the
-  * [[HllBuffer]]/[[KmvBuffer]] distinct sketches and the
+  * HLL and theta distinct sketches Spark ships, and the
   * POINT-QUERY complement to [[FreqSketchAgg]]'s Misra-Gries top-k
   * (MG answers "which keys are heavy", CMS answers "how heavy is this
   * key" for ANY key, without storing keys at all).
@@ -148,9 +148,9 @@ object CmsBuffer {
 }
 
 /** Shared plumbing for the CMS aggregate pair. Bounds are validated in
-  * checkInputDataTypes, never in the abstract constructor (the
-  * HllAggBase lesson: it runs during executor-side deserialization
-  * with subclass fields still 0). */
+  * checkInputDataTypes, never in the abstract constructor: that body
+  * runs during executor-side deserialization with subclass fields
+  * still 0, so a `require` there fails every task. */
 abstract class CmsAggBase extends TypedImperativeAggregate[CmsBuffer] {
   def child: Expression
   def depth: Int

@@ -47,27 +47,6 @@ object F {
   def freqSketch(key: Column, capacity: Int): Column =
     aggColumn(FreqSketchAgg(expr(key), capacity))
 
-  /** Aggregate: approximate count-distinct as a single-binary-buffer
-    * HLL (see [[HllAgg]] — the codegen-friendly replacement for the
-    * builtin's ~m/32-column buffer). Error ≈ 1.04/√(2^bits). */
-  def hllDistinct(c: Column, bits: Int = 14): Column =
-    aggColumn(HllAgg(expr(c), bits))
-
-  /** Aggregate: the HLL register file itself as binary — the
-    * sketch-persistence half of incremental distinct maintenance
-    * (see [[HllSketchAgg]]). */
-  def hllSketch(c: Column, bits: Int = 14): Column =
-    aggColumn(HllSketchAgg(expr(c), bits))
-
-  /** Aggregate: register-max fold of stored sketches (see
-    * [[HllUnionAgg]]); emits the merged sketch so rollups compose. */
-  def hllUnion(c: Column, bits: Int = 14): Column =
-    aggColumn(HllUnionAgg(expr(c), bits))
-
-  /** Scalar: cardinality estimate of a stored sketch (see
-    * [[HllEstimate]]). */
-  def hllEstimate(c: Column): Column = column(HllEstimate(expr(c)))
-
   /** Aggregate: mergeable log-histogram quantile sketch of a numeric
     * column, binary (see [[QSketchAgg]]); value-relative error ≤
     * 2^-(sub+1). */
@@ -88,25 +67,6 @@ object F {
     * [[InterleaveBits]]) — the Z-order clustering key. */
   def interleaveBits(a: Column, b: Column): Column =
     column(InterleaveBits(expr(a), expr(b)))
-
-  /** Aggregate: KMV theta sketch — k smallest distinct element hashes
-    * as binary (see [[KmvSketchAgg]]); supports union AND
-    * intersection over stored sketches. */
-  def kmvSketch(c: Column, k: Int = 1024): Column =
-    aggColumn(KmvSketchAgg(expr(c), k))
-
-  /** Aggregate: merge of stored KMV sketches (see [[KmvUnionAgg]]). */
-  def kmvUnion(c: Column, k: Int = 1024): Column =
-    aggColumn(KmvUnionAgg(expr(c), k))
-
-  /** Scalar: distinct-count estimate of a stored KMV sketch. */
-  def kmvEstimate(c: Column): Column = column(KmvEstimate(expr(c)))
-
-  /** Scalar: intersection-cardinality estimate of two stored KMV
-    * sketches (see [[KmvIntersect]]) — the set operation HLL cannot
-    * answer. */
-  def kmvIntersect(a: Column, b: Column): Column =
-    column(KmvIntersect(expr(a), expr(b)))
 
   /** Aggregate: Count-Min frequency sketch of a column, binary (see
     * [[CmsAgg]]) — point frequency queries for ANY key without storing

@@ -77,7 +77,8 @@ final class FreqSketchBuffer(val capacity: Int) {
   * Emits array<struct<token,count>> of the surviving counters sorted
   * (count DESC, token ASC); counts are Misra-Gries lower bounds, see
   * [[FreqSketchBuffer]] for the guarantee. Runs on the
-  * ObjectHashAggregate path like [[TopKAgg]]/[[HllAgg]]; a partial
+  * ObjectHashAggregate path like [[TopKAgg]] and Spark's
+  * `hll_sketch_agg` (single-buffer TypedImperativeAggregates); a partial
   * buffer is ≤ capacity entries regardless of input size, so the
   * shuffle carries one ≤ capacity-entry sketch per partition instead
   * of the full vocabulary.

@@ -64,16 +64,6 @@ object GraftFunctions {
       MinHashUnionAgg(args.head, intArg("minhash_union", args(1)))),
     "top_k" -> (args =>
       TopKAgg(args.head, args(1), intArg("top_k", args(2)))),
-    "hll_distinct" -> (args =>
-      HllAgg(args.head,
-        if (args.length > 1) intArg("hll_distinct", args(1)) else 14)),
-    "hll_sketch" -> (args =>
-      HllSketchAgg(args.head,
-        if (args.length > 1) intArg("hll_sketch", args(1)) else 14)),
-    "hll_union" -> (args =>
-      HllUnionAgg(args.head,
-        if (args.length > 1) intArg("hll_union", args(1)) else 14)),
-    "hll_estimate" -> (args => HllEstimate(args.head)),
     "qsketch" -> (args =>
       QSketchAgg(args.head,
         if (args.length > 1) intArg("qsketch", args(1)) else 5)),
@@ -82,14 +72,6 @@ object GraftFunctions {
         if (args.length > 1) intArg("qsketch_union", args(1)) else 5)),
     "qsketch_quantile" -> (args =>
       QSketchQuantile(args.head, doubleArg("qsketch_quantile", args(1)))),
-    "kmv_sketch" -> (args =>
-      KmvSketchAgg(args.head,
-        if (args.length > 1) intArg("kmv_sketch", args(1)) else 1024)),
-    "kmv_union" -> (args =>
-      KmvUnionAgg(args.head,
-        if (args.length > 1) intArg("kmv_union", args(1)) else 1024)),
-    "kmv_estimate" -> (args => KmvEstimate(args.head)),
-    "kmv_intersect" -> (args => KmvIntersect(args.head, args(1))),
     "cms_sketch" -> (args =>
       CmsAgg(args.head,
         if (args.length > 1) intArg("cms_sketch", args(1)) else 4,
@@ -110,11 +92,9 @@ object GraftFunctions {
     "interleave_bits" -> (args => InterleaveBits(args.head, args(1))),
   )
 
-  /** Idempotent per-session registration. NOTE: a name Spark already
-    * ships is never overridden — e.g. `hll_union` collides with the
-    * Spark 3.5+ datasketches builtin, so SQL text gets the builtin
-    * there while Scala callers reach graft's via [[F.hllUnion]]; all
-    * other graft names (cms_*, kmv_*, qsketch*, …) are collision-free. */
+  /** Idempotent per-session registration. No name in [[all]] is a
+    * Spark built-in (SqlInterfaceSpec), so this and [[inject]] give
+    * every name the same meaning. */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>

@@ -28,12 +28,14 @@ import org.apache.spark.sql.types._
   *  - Merge is POINTWISE COUNT ADDITION — exact, lossless,
   *    commutative, associative. A sketch table rolled up over any
   *    regrouping is bit-identical to sketching the raw corpus
-  *    (asserted by QSketchSpec), the same contract as [[HllBuffer]]'s
-  *    register max. GK/t-digest merges lose precision per merge and
-  *    depend on merge order — under Spark's nondeterministic partial
-  *    merge order their output is not even stable run-to-run.
+  *    (asserted by QSketchSpec). GK/t-digest merges lose precision
+  *    per merge and depend on merge order — under Spark's
+  *    nondeterministic partial merge order their output is not even
+  *    stable run-to-run.
   *  - The buffer is one object on the ObjectHashAggregate path
-  *    (the [[HllAgg]]/[[TopKAgg]] discipline), with sparse size
+  *    (the [[TopKAgg]] discipline, and that of Spark's single-buffer
+  *    `hll_sketch_agg`, unlike `approx_count_distinct`'s ~m/32 buffer
+  *    columns), with sparse size
   *    bounded by the number of OCCUPIED buckets — data spanning six
   *    orders of magnitude touches ~ 6·log2(10)·2^sub ≈ 640 buckets
   *    (~10 KiB serialized), independent of row count.
@@ -147,9 +149,9 @@ abstract class QSketchAggBase extends TypedImperativeAggregate[QSketchBuffer] {
   def child: Expression
   def sub: Int
 
-  // see HllAggBase: bounds validated at analysis time, never in the
-  // abstract constructor (runs during executor-side deserialization
-  // with subclass fields still 0)
+  // bounds validated at analysis time, never in the abstract
+  // constructor (runs during executor-side deserialization with
+  // subclass fields still 0)
   protected def subCheck: Option[TypeCheckResult] =
     if (sub < 1 || sub > 16)
       Some(TypeCheckResult.TypeCheckFailure(s"$prettyName requires 1 <= sub <= 16, got $sub"))

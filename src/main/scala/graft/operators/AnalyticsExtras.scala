@@ -138,7 +138,7 @@ object AnalyticsExtras {
     * day grid and a distinct count per day. The ×7 expansion happens
     * at user-day grain, NOT event grain, so 100 TB of events reduces
     * to |users|×|days| before any windowing; past that scale the same
-    * query folds the per-day `hll_sketch` table
+    * query folds the per-day `hll_sketch_agg` table
     * ([[KpiQueries.sketchRollup]]) 7 sketches per day instead. */
   def slidingDistinct(spark: SparkSession, dir: String): DataFrame = {
     val ud = load(spark, dir, "events")
@@ -154,24 +154,24 @@ object AnalyticsExtras {
   }
 
   /** The 100 TB path of [[slidingDistinct]], executed (r8): trailing
-    * 7-day distinct from the stored per-day `hll_sketch` table — one
+    * 7-day distinct from the stored per-day `hll_sketch_agg` table — one
     * 4 KiB sketch per day crosses the window, so the ×7 expansion
     * happens at SKETCH grain (|days|×7 rows of binaries), never
     * user-day grain, and the raw events are touched exactly once (the
     * per-day sketch build a nightly job already does). Accuracy gate:
     * the exact windowed distinct ([[slidingDistinct]]'s formulation)
     * rides the row hash-pinned; the folded estimate is gated by
-    * within_5pct (bits 14 ⇒ σ ≈ 0.8%, ~6σ; deterministic per
+    * within_5pct (lgConfigK 14 ⇒ σ ≈ 0.8%, ~6σ; deterministic per
     * fixture). */
   def slidingDistinctHll(spark: SparkSession, dir: String): DataFrame = {
     val daily = load(spark, dir, "events")
       .groupBy(to_date(col("ts")).as("d"))
-      .agg(F.hllSketch(col("user_id"), 14).as("sk"))
+      .agg(hll_sketch_agg(col("user_id"), 14).as("sk"))
     val days = daily.select(col("d").as("day"))
     val folded = daily.join(broadcast(days),
         col("d").between(date_sub(col("day"), 6), col("day")))
       .groupBy(col("day"))
-      .agg(F.hllEstimate(F.hllUnion(col("sk"), 14)).as("approx_7d"))
+      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_7d"))
       .select(date_format(col("day"), "yyyy-MM-dd").as("d"), col("approx_7d"))
     slidingDistinct(spark, dir).join(folded, Seq("d"))
       .select(col("d"), col("users_7d"),

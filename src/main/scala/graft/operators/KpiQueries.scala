@@ -181,18 +181,17 @@ object KpiQueries {
   /** HLL++ approximate-distinct variant for the 100 TB path (SURVEY.md
     * §2.3 A2), oracle-gated on accuracy: emits
     * `within_5pct = |approx - exact| <= 5% * exact`, which the SQL
-    * oracle asserts as TRUE (HLL at rsd=0.01 is deterministic for a
-    * given input, so this is a stable gate, ~5 sigma of slack).
+    * oracle asserts as TRUE (HLL at lgConfigK=14 is deterministic for
+    * a given input, so this is a stable gate, ~6 sigma of slack).
     *
     * ONE scan: first reduce to distinct (event_type, user_id) pairs
     * (two-phase agg with map-side combine), then compute BOTH counts
     * from the deduped pairs — count(user_id) IS the exact distinct,
-    * and approx_count_distinct over already-unique values yields the
-    * identical HLL estimate (sketches are insensitive to
-    * multiplicity). This also avoids the RewriteDistinctAggregates
-    * trap (count(DISTINCT) + HLL in ONE Aggregate ⇒ a 2^p-register
-    * sketch buffer PER USER): neither aggregate here is DISTINCT, so
-    * both stay plain two-phase. NULL event_type groups survive
+    * and the HLL sketch of already-unique values yields the identical
+    * estimate (sketches are insensitive to multiplicity). This also
+    * avoids the RewriteDistinctAggregates trap (count(DISTINCT) + HLL
+    * in ONE Aggregate ⇒ a 2^p-register sketch buffer PER USER):
+    * neither aggregate here is DISTINCT, so both stay plain two-phase. NULL event_type groups survive
     * naturally (no join needed). At 100 TB the pair-dedup shuffle
     * carries |distinct pairs| rows — the same shuffle an exact
     * distinct pays anyway; a pure-approx production variant would
@@ -201,15 +200,15 @@ object KpiQueries {
     load(spark, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy(col("event_type"))
-      // bits=14 ⇒ sketch σ ≈ 0.8% ⇒ the 5% gate sits at ~6 sigma — a
-      // reseeded fixture or new scale can't flip it spuriously. The
-      // native hll_distinct (graft.functions.HllAgg) carries the 2^14
-      // registers as ONE binary buffer on the ObjectHashAggregate
-      // path; the builtin at rsd 0.01 models them as ~1537 buffer
-      // COLUMNS, which knocked the whole stage out of efficient
+      // lgConfigK=14 ⇒ sketch σ ≈ 0.8% ⇒ the 5% gate sits at ~6 sigma
+      // — a reseeded fixture or new scale can't flip it spuriously.
+      // hll_sketch_agg is a TypedImperativeAggregate: its 2^14
+      // registers are ONE object buffer on the ObjectHashAggregate
+      // path. approx_count_distinct at rsd 0.01 models them as ~1537
+      // buffer COLUMNS, which knocked the whole stage out of efficient
       // codegen (2.5× on this query, r6).
       .agg(count(col("user_id")).as("exact_users"),
-        F.hllDistinct(col("user_id"), 14).as("approx_users"))
+        hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("approx_users"))
       .select(col("event_type"), col("exact_users"),
         (abs(col("approx_users") - col("exact_users")) <=
           col("exact_users") * lit(0.05)).as("within_5pct"))
@@ -255,8 +254,8 @@ object KpiQueries {
     * 2^p-register sketch per group; the shuffle carries
     * |groups| × sketch-size bytes TOTAL (kilobytes), independent of
     * row count — vs [[approxDistinct]]'s |distinct pairs| shuffle
-    * rows. HLL register-max merge is commutative/associative, so the
-    * estimate is deterministic under any partitioning.
+    * rows. Once a sketch is in HLL mode its merge is a register max,
+    * which is commutative and associative.
     *
     * Accuracy-gated oracle (r9, formerly rows-only): the exact
     * per-group distinct rides the output row so DuckDB pins
@@ -269,9 +268,9 @@ object KpiQueries {
   def approxDistinctFast(spark: SparkSession, dir: String): DataFrame = {
     val est = load(spark, dir, "events")
       .groupBy(col("event_type"))
-      // bits=12 ⇒ 4 KiB sketch, σ ≈ 1.6% — the narrow fast-path
-      // sketch, same single-binary-buffer kernel as the gated query
-      .agg(F.hllDistinct(col("user_id"), 12).as("approx_users"))
+      // lgConfigK=12 ⇒ σ ≈ 1.6% — the narrow fast-path sketch, same
+      // single-buffer aggregate as the gated query
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12)).as("approx_users"))
     val exact = load(spark, dir, "events")
       .groupBy(col("event_type"))
       .agg(count_distinct(col("user_id")).as("exact_users"))
@@ -572,7 +571,7 @@ object KpiQueries {
       .groupBy(col("dt"))
       .agg(
         F.minhashUnion(col("sig"), N).as("usig"),
-        F.hllDistinct(col("user_id"), 12).as("nd"))
+        hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12)).as("nd"))
     val a = daily.select(col("dt").as("day_a"), col("usig").as("a_sig"), col("nd").as("n_a"))
     val b = daily.select(col("dt").as("day_b"), col("usig").as("b_sig"), col("nd").as("n_b"))
     a.join(b, to_date(col("day_b")) === date_add(to_date(col("day_a")), 1))
@@ -610,9 +609,9 @@ object KpiQueries {
         coalesce(col("n_ov"), lit(0L)).as("exact_overlap"))
   }
 
-  /** Day-over-day overlap via KMV theta sketches — the DIRECT
-    * set-intersection estimate ([[graft.functions.KmvIntersect]]:
-    * shared retained hashes below the common θ, scaled 1/θ), vs
+  /** Day-over-day overlap via theta sketches — the DIRECT
+    * set-intersection estimate (`theta_intersection`: shared retained
+    * hashes below the common θ, scaled 1/θ), vs
     * [[userOverlap]]'s MinHash×HLL inclusion-exclusion. Same stored-
     * sketch economics (the pair join touches |days| × ≤8 KiB
     * sketches, never raw events), better estimator: additive
@@ -620,10 +619,11 @@ object KpiQueries {
     * FRACTION of either set — the regime where Jaccard-based
     * inclusion-exclusion washes out. Below k distinct users/day the
     * sketch holds the full hash set and the intersection is exact
-    * (fixture regime; KmvSpec also gates the at-capacity estimator on
-    * synthetic large sets). Accuracy-gated oracle (r8): exact overlap
-    * ([[exactDayOverlap]]) on the row, hash-pinned by DuckDB; the KMV
-    * estimate gated by `within_tol` at 5% of the exact union — tight
+    * (the sf0.001 regime KpiQueriesSpec pins; sf0.1 days of up to
+    * ~1.4k users run in estimation mode). Accuracy-gated oracle (r8):
+    * exact overlap ([[exactDayOverlap]]) on the row, hash-pinned by
+    * DuckDB; the theta estimate gated by `within_tol` at 5% of the
+    * exact union — tight
     * because the direct θ-intersection carries additive O(|A∪B|/√k)
     * error (k=1024 ⇒ ~3%) and is EXACT below capacity. */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame =
@@ -637,19 +637,21 @@ object KpiQueries {
           .as("within_tol"))
       .orderBy(col("day_a"))
 
-  /** The raw KMV estimator (spec target: KpiQueriesSpec asserts
-    * exactness below sketch capacity against driver-side sets). */
+  /** The raw theta estimator (spec target: KpiQueriesSpec asserts
+    * exactness below sketch capacity against driver-side sets).
+    * lgNomEntries = 10 ⇒ k = 1024 retained hashes. */
   private[graft] def kmvOverlapRaw(spark: SparkSession, dir: String): DataFrame = {
     val daily = load(spark, dir, "events")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-      .agg(F.kmvSketch(col("user_id"), 1024).as("sk"))
+      .agg(theta_sketch_agg(col("user_id"), 10).as("sk"))
     val a = daily.select(col("dt").as("day_a"), col("sk").as("a_sk"))
     val b = daily.select(col("dt").as("day_b"), col("sk").as("b_sk"))
     a.join(b, to_date(col("day_b")) === date_add(to_date(col("day_a")), 1))
       .select(col("day_a"), col("day_b"),
-        F.kmvEstimate(col("a_sk")).as("n_a"),
-        F.kmvEstimate(col("b_sk")).as("n_b"),
-        F.kmvIntersect(col("a_sk"), col("b_sk")).as("est_overlap"))
+        theta_sketch_estimate(col("a_sk")).as("n_a"),
+        theta_sketch_estimate(col("b_sk")).as("n_b"),
+        theta_sketch_estimate(theta_intersection(col("a_sk"), col("b_sk")))
+          .as("est_overlap"))
       .orderBy(col("day_a"))
   }
 
@@ -660,12 +662,14 @@ object KpiQueries {
     * is the per-partition sketch table a nightly job appends to.
     * Level 2 answers "distinct users per event_type over the whole
     * range" by register-max-folding the |days| stored sketches —
-    * O(days × 4 KiB), never rescanning raw events. Register max is
-    * lossless under re-merge, so the fold's estimate is BIT-IDENTICAL
-    * to a direct hll_distinct over the raw rows (asserted by HllSpec).
-    * Accuracy-gated oracle (r8): the exact per-type distinct rides the
-    * same output row so DuckDB can pin (event_type, days, exact_users)
-    * by hash while the folded estimate is gated by the `within_5pct`
+    * O(days × 4 KiB), never rescanning raw events. The fold's
+    * estimate is NOT bit-identical to a direct sketch over the raw
+    * rows (sf0.1, one event type: 1488 folded, 1494 direct, 1500
+    * exact); what holds is that it does not depend on how the rows
+    * were split into stored sketches (KpiQueriesSpec). Accuracy-gated
+    * oracle (r8): the exact per-type distinct rides the same output
+    * row so DuckDB can pin (event_type, days, exact_users) by hash
+    * while the folded estimate is gated by the `within_5pct`
     * CLAIM — a false claim hash-mismatches the oracle's TRUE and also
     * trips nothing silently (deterministic sketches: per-fixture the
     * bit is fixed, not flaky). The exact side exists only to make the
@@ -673,12 +677,12 @@ object KpiQueries {
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
     val daily = load(spark, dir, "events")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"), col("event_type"))
-      .agg(F.hllSketch(col("user_id"), 12).as("sk"))
+      .agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
     val folded = daily
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("days"),
-        F.hllEstimate(F.hllUnion(col("sk"), 12)).as("approx_users"))
+        hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_users"))
     val exact = load(spark, dir, "events")
       .groupBy(col("event_type"))
       .agg(count_distinct(col("user_id")).as("exact_users"))

@@ -800,18 +800,19 @@ object PipelineQueries {
     * store; the sketch table IS the state), (b) partition-prunes the
     * stored table to the days the batch touched (the touched-day list
     * is ≤ |batch days| — collected from a grouped batch, never raw
-    * rows), (c) register-max-folds stored ∪ batch sketches and
+    * rows), (c) `hll_union_agg`-folds stored ∪ batch sketches and
     * dynamic-partition-overwrites ONLY those days. Work per trigger is
-    * O(new data + touched-day sketches) — never O(history) — and the
-    * result is EXACT w.r.t. a from-scratch rebuild because register
-    * max is lossless under re-merge (asserted bit-level by
-    * StreamSketchSpec). Idempotent under micro-batch replay: re-merging
-    * a batch's users into a sketch that already holds them is a no-op
-    * (max is idempotent) — stronger than the additive-upsert gate,
-    * which relies on overwrite granularity alone. Returns the RAW
-    * per-day estimates (the gated wrapper joins the exact ground truth
-    * for the accuracy oracle; StreamSketchSpec asserts bit-identity to
-    * a from-scratch build on this raw form). */
+    * O(new data + touched-day sketches) — never O(history). A stored
+    * day's estimate does not depend on how its rows were batched
+    * (StreamSketchSpec compares it with a from-scratch build split
+    * another way). Idempotent under micro-batch replay: re-merging a
+    * batch's users into a sketch that already holds them leaves its
+    * estimate unchanged, and an HLL-mode sketch's bytes too
+    * (StreamSketchSpec replays a whole drain) — stronger than the
+    * additive-upsert gate, which relies on overwrite granularity alone. The stored `sk` column is the DataSketches
+    * HLL binary that `hll_sketch_agg` emits. Returns the RAW per-day
+    * estimates (the gated wrapper joins the exact ground truth for the
+    * accuracy oracle). */
   private[graft] def streamSketchTableCounted(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
     val in = writeJsonl(spark, dir, "graft-sksync-in", cutoffDate = Some(StreamCutoff))
@@ -819,7 +820,7 @@ object PipelineQueries {
     val n = sketchMaintenanceDrain(spark, in, out.toString, ck.toString)
     val table = spark.read.parquet(out.toString)
       .select(col("dt").cast("string").as("dt"),
-        graft.functions.F.hllEstimate(col("sk")).as("approx_users"))
+        hll_sketch_estimate(col("sk")).as("approx_users"))
       .orderBy(col("dt"))
     (table, n)
   }
@@ -1186,7 +1187,7 @@ object PipelineQueries {
           val batchSketches = batch.where(col("event_ts").isNotNull)
             .withColumn("dt", substring(col("event_ts"), 1, 10))
             .groupBy(col("dt"))
-            .agg(graft.functions.F.hllSketch(col("user_id"), 12).as("sk"))
+            .agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
             .cache()
           try {
             // table-exists = any dt= partition dir present. NOT the
@@ -1210,7 +1211,7 @@ object PipelineQueries {
               else batchSketches.limit(0)
             stored.union(batchSketches)
               .groupBy(col("dt"))
-              .agg(graft.functions.F.hllUnion(col("sk"), 12).as("sk"))
+              .agg(hll_union_agg(col("sk")).as("sk"))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("dt")

@@ -851,9 +851,9 @@ object TpchQueries {
     * scan computes every column's stats in a single agg row, then
     * `stack` unpivots to one row per column — no per-column scans.
     * Exact ndv here (oracle-checkable; the distinct expands the agg
-    * ×|columns|); at 100 TB swap the count_distincts for
-    * [[graft.functions.HllAgg]] and the plan loses the Expand
-    * entirely — the stats table tolerates ±1% ndv by construction. */
+    * ×|columns|); at 100 TB swap the count_distincts for HLL sketches
+    * ([[approxNdvStats]]) and the plan loses the Expand entirely —
+    * the stats table tolerates ±1% ndv by construction. */
   def tableStats(spark: SparkSession, dir: String): DataFrame = {
     val li = load(spark, dir, "lineitem")
     // min/max/null counts for all four columns fold in ONE cheap
@@ -897,14 +897,14 @@ object TpchQueries {
   }
 
   /** The 100 TB-path stats job (q_table_stats_approx, r8): ndv via
-    * [[graft.functions.HllAgg]] — four sketches in ONE pass with NO
+    * `hll_sketch_agg` — four sketches in ONE pass with NO
     * Expand (the exact count_distinct ×4 duplicates every input row
     * 4× through an Expand node; the documented swap at
     * [[tableStats]] is here executed, not just described, and
     * PlanSpec asserts the approx branch plans no Expand). Accuracy
     * gate: the exact stats ride the row (DuckDB pins col_name /
     * min / max / exact ndv / null count by hash) and each HLL
-    * estimate is gated by `ndv_ok` at 5% relative — bits 14 ⇒
+    * estimate is gated by `ndv_ok` at 5% relative — lgConfigK 14 ⇒
     * σ ≈ 0.8%, so the claim sits at ~6σ and is fixed per fixture
     * (seeded hash), not flaky. */
   def tableStatsApprox(spark: SparkSession, dir: String): DataFrame =
@@ -919,19 +919,23 @@ object TpchQueries {
   /** The production branch of [[tableStatsApprox]]: four HLL ndv
     * sketches in one pass, no Expand (PlanSpec-asserted). At 100 TB
     * this runs ALONE — the exact twin above exists only for the
-    * accuracy gate. */
-  private[graft] def approxNdvStats(spark: SparkSession, dir: String): DataFrame =
+    * accuracy gate. `hll_sketch_agg` takes no DOUBLE input, so each
+    * column is sketched through its `xxhash64` (a string cast was 2×
+    * slower still). */
+  private[graft] def approxNdvStats(spark: SparkSession, dir: String): DataFrame = {
+    def ndv(c: String) = hll_sketch_estimate(hll_sketch_agg(xxhash64(col(c)), 14))
     load(spark, dir, "lineitem").agg(
-        F.hllDistinct(col("l_quantity"), 14).as("a_q"),
-        F.hllDistinct(col("l_extendedprice"), 14).as("a_p"),
-        F.hllDistinct(col("l_discount"), 14).as("a_d"),
-        F.hllDistinct(col("l_tax"), 14).as("a_t"))
+        ndv("l_quantity").as("a_q"),
+        ndv("l_extendedprice").as("a_p"),
+        ndv("l_discount").as("a_d"),
+        ndv("l_tax").as("a_t"))
       .select(expr(
         """stack(4,
           |  'l_quantity', a_q,
           |  'l_extendedprice', a_p,
           |  'l_discount', a_d,
           |  'l_tax', a_t) AS (col_name, approx_ndv)""".stripMargin))
+  }
 
   /** Bivariate statistics aggregates (§2.3 A+ breadth): corr /
     * covariance / least-squares regression of extended price on

@@ -138,6 +138,60 @@ class KpiQueriesSpec extends SparkSpec {
     }
   }
 
+  // σ ≈ 1.04/√2^lgK for HLL (lgK 14: 0.8%, lgK 12: 1.6%) and ≈ 1/√k for
+  // theta (k = 1024: 3.1%); each bound below is ~4σ on fixed data, so the
+  // gates are deterministic. Theta is exact below k.
+  private val sketchCardinalities = Seq(1000L, 60000L, 200000L)
+
+  test("HLL sketch estimates stay within ~4 sigma of exact at lgConfigK 14 and 12") {
+    import org.apache.spark.sql.functions._
+    for (n <- sketchCardinalities) {
+      val r = spark.range(n).agg(
+        hll_sketch_estimate(hll_sketch_agg(col("id"), 14)),
+        hll_sketch_estimate(hll_sketch_agg(col("id"), 12))).head()
+      def err(i: Int) = math.abs(r.getLong(i) - n).toDouble / n
+      assert(err(0) <= 0.03, s"n=$n lgK=14 est=${r.getLong(0)}")
+      assert(err(1) <= 0.065, s"n=$n lgK=12 est=${r.getLong(1)}")
+    }
+  }
+
+  test("theta sketch below k = 1024 is exact") {
+    import org.apache.spark.sql.functions._
+    for (n <- sketchCardinalities.filter(_ < 1024)) {
+      val est = spark.range(n)
+        .agg(theta_sketch_estimate(theta_sketch_agg(col("id"), 10))).head().getLong(0)
+      assert(est === n, s"theta below k must be exact")
+    }
+  }
+
+  test("theta sketch at k = 1024 stays within 4/sqrt(k) of exact") {
+    import org.apache.spark.sql.functions._
+    for (n <- sketchCardinalities.filter(_ >= 1024)) {
+      val est = spark.range(n)
+        .agg(theta_sketch_estimate(theta_sketch_agg(col("id"), 10))).head().getLong(0)
+      assert(math.abs(est - n).toDouble / n <= 4.0 / math.sqrt(1024), s"n=$n theta est=$est")
+    }
+  }
+
+  test("a folded HLL sketch's estimate does not depend on how its rows were split") {
+    import org.apache.spark.sql.functions._
+    // the stored-sketch contract behind q_sketch_rollup: the same rows
+    // cut into 17 or 5 stored sketches fold to the same estimate (and
+    // the same bytes). A fold need not equal one direct sketch of the
+    // rows: that contract was dropped with graft's own HLL kernel.
+    val df = spark.range(40000)
+      .select(col("id"), (col("id") * 6361 % 9973).as("v"))
+    def fold(groups: Int) = df.groupBy(col("id") % groups)
+      .agg(hll_sketch_agg(col("v"), 12).as("sk"))
+      .agg(hll_union_agg(col("sk")).as("sk"))
+      .select(col("sk"), hll_sketch_estimate(col("sk"))).head()
+    val (a, b) = (fold(17), fold(5))
+    assert(a.getLong(1) === b.getLong(1), "folded estimate depends on the split")
+    assert(java.util.Arrays.equals(a.getAs[Array[Byte]](0), b.getAs[Array[Byte]](0)),
+      "folded sketch bytes depend on the split")
+    assert(math.abs(a.getLong(1) - 9973L).toDouble / 9973 <= 0.05, s"est=${a.getLong(1)}")
+  }
+
   test("userOverlap estimates track the exact day-over-day intersection") {
     import org.apache.spark.sql.functions.{col, date_format}
     val days: Map[String, Set[Long]] = Tables.load(spark, sf, "events")

@@ -48,28 +48,6 @@ object QSketchProperties extends Properties("QSketch/ZOrder") {
       java.util.Arrays.equals(QSketchBuffer.deserialize(bytes).serialized, bytes)
     }
 
-  private val genHash: Gen[Long] = Gen.choose(Long.MinValue, Long.MaxValue)
-
-  property("kmv merge of split halves is byte-identical to single-pass") =
-    Prop.forAll(Gen.listOf(genHash), Gen.choose(0, 100)) { (xs, cut) =>
-      val whole = new graft.functions.KmvBuffer(32)
-      xs.foreach(whole.addHash)
-      val a = new graft.functions.KmvBuffer(32)
-      val b = new graft.functions.KmvBuffer(32)
-      val (l, r) = xs.splitAt(cut % (xs.length + 1))
-      l.foreach(a.addHash); r.foreach(b.addHash)
-      a.mergeFrom(b)
-      java.util.Arrays.equals(a.serialized, whole.serialized)
-    }
-
-  property("kmv retains exactly the k smallest distinct normalized hashes") =
-    Prop.forAll(Gen.listOf(genHash)) { xs =>
-      val buf = new graft.functions.KmvBuffer(16)
-      xs.foreach(buf.addHash)
-      val expect = xs.map(_ >>> 1).distinct.sorted.take(16)
-      buf.hashes.toSeq == expect
-    }
-
   private val genCoord: Gen[Long] = Gen.choose(0L, ZOrderKey.DimMax)
 
   /** Inverse of spread: collect every second bit. */

@@ -470,18 +470,50 @@ class SqlInterfaceSpec extends SparkSpec {
   }
 
   test("custom aggregate + scalar functions compose in SQL over a view") {
-    // KMV: no name collision with Spark's datasketches builtins (the
-    // builtin `hll_union` shadows graft's SQL name — install() never
-    // overrides a builtin; Scala callers use F.hllUnion directly)
+    // qsketch merges by exact pointwise count addition, so the
+    // per-day sketches folded in SQL answer the same median as one
+    // sketch over the whole view
     Tables.registerViews(spark, sf)
-    val est = spark.sql(
-      """SELECT kmv_estimate(kmv_union(sk)) AS users FROM (
-        |  SELECT kmv_sketch(user_id) AS sk FROM events
+    val folded = spark.sql(
+      """SELECT qsketch_quantile(qsketch_union(sk), 0.5) AS med FROM (
+        |  SELECT qsketch(value) AS sk FROM events
         |  GROUP BY date_format(ts, 'yyyy-MM-dd'))""".stripMargin)
-      .collect()(0).getLong(0)
-    val exact = Tables.load(spark, sf, "events")
-      .agg(countDistinct(col("user_id"))).collect()(0).getLong(0)
-    // KMV is exact below capacity (k=1024 > fixture user count)
-    assert(est == exact, s"$est vs $exact")
+      .collect()(0).getDouble(0)
+    val direct = spark.sql(
+      "SELECT qsketch_quantile(qsketch(value), 0.5) AS med FROM events")
+      .collect()(0).getDouble(0)
+    assert(folded == direct, s"$folded vs $direct")
+  }
+
+  test("graft's SQL names mean the same function with and without the extension") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.GraftFunctions
+    val names = GraftFunctions.all.map(_._1)
+    val builtins = names.filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(builtins.isEmpty, s"graft SQL names that are Spark built-ins: $builtins")
+    // the function setup of Tables.session() (the extension, then
+    // install) on a second session of this context, beside the spec
+    // session's install()-only registry
+    val ext = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    try {
+      GraftFunctions.install(ext)
+      GraftFunctions.install(spark)
+      // three int literals satisfy every graft builder's arity and
+      // literal-argument checks
+      val args = Seq.fill(3)(Literal(1))
+      def resolved(s: org.apache.spark.sql.SparkSession, n: String): String =
+        s.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(n))
+          .map(b => scala.util.Try(b(args).getClass.getName).fold(e => s"error: $e", identity))
+          .getOrElse("missing")
+      val differ = names.map(n => (n, resolved(ext, n), resolved(spark, n)))
+        .filter { case (_, a, b) => a != b || !a.startsWith("graft.") }
+      assert(differ.isEmpty, s"(name, extension session, install() session): $differ")
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
   }
 }
